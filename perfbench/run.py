@@ -48,11 +48,18 @@ WORKLOADS = {
     "batch_sample": {},
 }
 
-# batch_sample: the reference's own query semantics, then one query per
-# family of the batch surface
+# batch_sample: the reference's own query semantics (they cover the text,
+# tfi and evt families), then one query for each other family of
+# graft.Queries.families, in registry order, each the family's fastest in a
+# cold sf0.01 pass: every graft.operators module runs
 BATCH_QUERIES = [
     "q_parse_clean", "q_subreddit_stats", "q_avg_sentiment_by_lang",
     "q_top_keywords", "q_dedup_keep_last", "q_rolling_metric",
+    "q_sql_surface", "q_bm25_scores", "q_dedup_exact", "q_embed_isotropy",
+    "q_table_checksum", "q_skew_salted_agg", "q_asof_join", "q_train_split",
+    "q_gopher_rules", "q_kmeans", "q_token_diversity", "q_cuped",
+    "q_triangle_count", "q_dp_release", "q_calibration_bins",
+    "q_media_features",
 ]
 BATCH_SF = 0.01
 
@@ -305,7 +312,7 @@ def reddit_metrics(raw, work, rate):
             layers[f"pipeline.share.{name}"] = med(
                 [100.0 * p[key] / p["batch_s"] for p in per])
             detail[f"pipeline_{key}"] = med([p[key] for p in per])
-    return e2e, detail, layers, attempted, failures
+    return e2e, detail, layers, attempted, 0, failures
 
 
 def dir_files(path):
@@ -319,26 +326,35 @@ def hub_metrics(raw):
     busy = sum(b["dur_ms"] for b in bs) / 1000.0
     # every batch admitted one slice of HUB_DOCS / HUB_SLICES documents
     rates = [HUB_DOCS // HUB_SLICES / (b["dur_ms"] / 1000.0) for b in bs]
+    docs = HUB_DOCS // HUB_SLICES * len(bs)
     reads = [r["s"] for r in raw["readouts"]]
+    comps = raw["compactions"]
     # the final readouts against their batch twins' oracles
     failures = oracle_check(raw["data"], raw["check_dir"], raw["twins"])
     failed_ops = raw["failed_ops"]
-    attempted = len(bs) + len(reads) + len(raw["twins"])
+    attempted = len(bs) + len(reads) + len(comps) + failed_ops + \
+        len(raw["twins"])
     e2e = {}
     if reads and busy and not failed_ops:
         e2e = {"latency_p50_s": stats.median(reads),
-               "throughput_per_s": stats.median(rates)}
+               "throughput_per_s": docs / busy}
+    compact_s = sum(c["s"] for c in comps)
     detail = {"slices": raw["slices"], "docs": raw["docs"],
               "batches": len(bs), "busy_s": busy,
               "batch_rates": rates,
-              "ingest_docs_per_s": raw["docs"] / busy if busy else 0.0,
-              "readout_p50_s": med(reads), "readout_samples": len(reads)}
-    layers = {}
+              "readout_p50_s": med(reads), "readout_samples": len(reads),
+              "readout_s": {x["name"]: x["s"] for x in raw["readouts"]},
+              "compactions": comps}
+    layers = {
+        # logs a compaction rewrote (fewer batch directories after it)
+        "hub.compactions": sum(c["dirs_after"] < c["dirs_before"]
+                               for c in comps),
+        "hub.share.compact": 100.0 * compact_s / (busy + compact_s)
+        if busy + compact_s else 0.0}
     for m in HUB_MAINTAINERS:
         n, size = dir_files(os.path.join(raw["base"], m))
         layers[f"hub.log_files.{m}"] = n
         layers[f"hub.log_bytes.{m}"] = size
-    detail["readout_s"] = {x["name"]: x["s"] for x in raw["readouts"]}
     for x in raw["readouts"]:
         layers[f"readout.share.{x['name']}"] = 100.0 * x["s"] / sum(reads)
     if raw.get("trace"):
@@ -348,10 +364,7 @@ def hub_metrics(raw):
                 (f"write_s.{m}", f"write.{m}") for m in HUB_MAINTAINERS]:
             layers[f"hub.share.{name}"] = med(
                 [100.0 * p[key] / p["batch_s"] for p in per])
-        detail["compact_s"] = sum(p["compact_s"] for p in per)
-        layers["hub.compactions"] = sum(p["compactions"] for p in per)
-    return e2e, detail, layers, attempted, failures + (
-        [f"{failed_ops} failed batches or readouts"] if failed_ops else [])
+    return e2e, detail, layers, attempted, failed_ops, failures
 
 
 def oracle_check(data, check, queries):
@@ -409,7 +422,8 @@ def batch_metrics(raw):
     suite = sum(per_q.values())
     failures = oracle_check(raw["data"], raw["check_dir"], order)
     failed_ops = raw["failed_ops"]
-    attempted = len(runs) + len(order) * 2
+    # the check pass's executions, the timed ones and the oracle compares
+    attempted = len(order) + len(runs) + len(order)
     e2e = {}
     if not failed_ops and suite:
         e2e = {"latency_p50_s": stats.median(list(per_q.values())),
@@ -427,8 +441,7 @@ def batch_metrics(raw):
         for key in ["stages", "tasks", "shuffle_bytes", "input_bytes",
                     "spill_bytes"]:
             layers[f"suite.{key}"] = sum(tq[q][key] for q in order)
-    return e2e, detail, layers, attempted, failures + (
-        [f"{failed_ops} failed query executions"] if failed_ops else [])
+    return e2e, detail, layers, attempted, failed_ops, failures
 
 
 # ---------------------------------------------------------------- names
@@ -470,7 +483,8 @@ def per_layer():
     out += [(f"pipeline.share.{n}", "%", "lower") for _, n in REDDIT_SHARES]
     out += [("hub.share.driver", "%", "lower")]
     out += [(f"hub.share.write.{m}", "%", "lower") for m in HUB_MAINTAINERS]
-    out += [("hub.compactions", "count", "lower")]
+    out += [("hub.share.compact", "%", "lower"),
+            ("hub.compactions", "count", "higher")]
     out += [(f"hub.log_files.{m}", "count", "lower") for m in HUB_MAINTAINERS]
     out += [(f"hub.log_bytes.{m}", "bytes", "lower") for m in HUB_MAINTAINERS]
     out += [(f"readout.share.{r}", "%", "lower") for r in HUB_READOUTS]
@@ -544,16 +558,20 @@ def main():
             res = hub_metrics(raw)
         else:
             res = batch_metrics(raw)
-        e2e, detail, layers, attempted, failures = res
-        # the median set-up; the first one also carries process start
-        e2e["setup_s"] = stats.median(raw["setup_s"])
-        detail["setup_each_s"] = raw["setup_s"]
+        e2e, detail, layers, attempted, failed_ops, failures = res
+        if raw["setup_s"] > 0:  # 0 when the run failed before its window
+            e2e["setup_s"] = raw["setup_s"]
+        detail["phases_s"] = dict(raw["phases"])
     finally:
         if gen and gen.poll() is None:
             gen.terminate()
             gen.wait(timeout=10)
         shutil.rmtree(work, ignore_errors=True)
 
+    # every failed operation (batch, compaction, readout, query execution)
+    # and every failed output check counts once against `attempted`
+    failed = failed_ops + len(failures)
+    detail["failed_ops"] = failed_ops
     detail["failures"] = failures
     os.makedirs(RUNS, exist_ok=True)
     key = f"{a.workload}-{a.seed}-cpus{a.cpus}"
@@ -574,9 +592,9 @@ def main():
     else:
         metrics = {n: {"value": float(e2e[n]), "unit": u}
                    for n, u in END_TO_END if n in e2e}
-    result = {"correct": not failures and len(metrics) > 0,
+    result = {"correct": failed == 0 and len(metrics) > 0,
               "attempted": int(attempted),
-              "failed": len(failures), "metrics": metrics}
+              "failed": int(failed), "metrics": metrics}
     with open(os.path.join(RUNS, f"{key}-trace{a.trace}.json"), "w") as f:
         json.dump(result, f)
     print(json.dumps({"detail": detail}, default=float))

@@ -2,8 +2,11 @@ package perfbench
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import graft.Queries
 import graft.functions.{Det, Text}
 import graft.streaming._
@@ -21,16 +24,14 @@ import org.apache.spark.sql.types.LongType
   *   - reddit_*: MicroBatchPipeline.run over MicroBatchPipeline.socketLines,
   *     fed by the separate generator process (perfbench/generator.py);
   *   - hub_ingest: IngestHub.run over a parquet file stream, one slice per
-  *     trigger, with the six maintainers' readouts polled between batches;
+  *     trigger, then Compaction.compactLog on the compacting logs and the
+  *     six maintainers' readouts;
   *   - batch_sample: Queries.byName(q).run through the `noop` sink.
   *
   * Usage: Main --workload W --work DIR --seconds S --trace 0|1 --cpus N
   *             --t0 EPOCH_S
   */
 object Main {
-
-  /** Set-ups per run; the reported set-up time is their median. */
-  val SetUps = 3
 
   final case class Args(workload: String, work: String, seconds: Double,
       trace: Boolean, cpus: Int, t0: Double)
@@ -48,8 +49,9 @@ object Main {
       case "batch_sample" => BatchSample.run(a)
       case w => throw new IllegalArgumentException(s"unknown workload $w")
     }
-    Files.writeString(Paths.get(a.work, "raw.json"), Json.write(raw))
     phase(a, "done")
+    Files.writeString(Paths.get(a.work, "raw.json"),
+      toJson(raw + ("phases" -> phases.toSeq)))
     SparkSession.getActiveSession.foreach(_.stop())
   }
 
@@ -70,36 +72,31 @@ object Main {
       .config("spark.sql.warehouse.dir", s"${a.work}/warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    phase(a, "session")
     s
   }
 
-  /** Set up [[SetUps]] times: each time a fresh session and the workload's
-    * input load and warm-up (`prepare`). The first set-up is timed from
-    * the benchmark process start (`a.t0`), so it also carries input
-    * generation and JVM start. Returns the last session and every
-    * set-up's seconds. */
-  def setUp(a: Args)(prepare: SparkSession => Unit)
-      : (SparkSession, Seq[Double]) = {
-    var spark: SparkSession = null
-    val secs = (0 until SetUps).map { i =>
-      val t0 = if (i == 0) a.t0 else now()
-      if (spark != null) {
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-      spark = session(a)
-      prepare(spark)
-      now() - t0
-    }
-    (spark, secs)
+  /** Set-up time: from the benchmark process start (`a.t0`, so it carries
+    * input generation, JVM start and the session) to the workload's first
+    * timed operation, with the input load and warm-up in between. */
+  def setUpDone(a: Args): Double = {
+    phase(a, "set-up done")
+    now() - a.t0
   }
 
   def now(): Double = System.currentTimeMillis() / 1000.0
 
-  /** Log a run phase with its offset from process start (to the JVM log). */
-  def phase(a: Args, name: String): Unit =
+  /** Run phases with their offsets from process start, for the detail line
+    * (and the JVM log). */
+  val phases = ArrayBuffer.empty[(String, Double)]
+
+  def phase(a: Args, name: String): Unit = {
+    phases += name -> (now() - a.t0)
     System.err.println(f"[perfbench] ${now() - a.t0}%7.2f s  $name")
+  }
+
+  def toJson(x: Any): String =
+    new ObjectMapper().registerModule(DefaultScalaModule).writeValueAsString(x)
 
   def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
@@ -148,18 +145,12 @@ object Reddit {
   import Main._
 
   def run(a: Args): Map[String, Any] = {
-    // set-up: session, input load and parse
-    val (spark, setups) = setUp(a) { spark =>
-      MicroBatchPipeline.parseBatch(
-        spark.read.text(s"${a.work}/warm_lines.txt")).count()
-    }
-    phase(a, "set-up done")
-    // one pipeline batch on the warm-up lines before the stream starts: a
-    // cold first batch can outlast the 10 s interval, which would delay the
-    // measured trigger
+    val spark = session(a)
+    // warm-up: one pipeline batch on the warm-up lines before the stream
+    // starts (a cold first batch can outlast the 10 s interval, which
+    // would delay the measured trigger)
     MicroBatchPipeline.processBatch(
       spark.read.text(s"${a.work}/warm_lines.txt"), 0L, s"${a.work}/warm")
-    phase(a, "warm-up batch done")
     val trace = if (a.trace) Some(new Trace(spark)) else None
     val portFile = Paths.get(a.work, "port")
     waitFor("generator port", 60)(Files.exists(portFile))
@@ -168,6 +159,9 @@ object Reddit {
     val summary = Paths.get(a.work, "gen_summary.json")
     val q = MicroBatchPipeline.run(
       MicroBatchPipeline.socketLines(spark, "127.0.0.1", port), out)
+    // what follows is the stream's own schedule: the generator aligns its
+    // measured window to the trigger clock
+    val setupS = setUpDone(a)
     // all lines sent, and a committed batch has consumed the last of them
     // (the socket source's offset is the index of its last line read)
     var lines = -1L
@@ -200,7 +194,7 @@ object Reddit {
       t.close(); r
     }
     val (checked, failures) = checkMetrics(spark, out)
-    Map("setup_s" -> setups, "batches" -> bs, "stream_ok" -> consumed,
+    Map("setup_s" -> setupS, "batches" -> bs, "stream_ok" -> consumed,
       "out" -> out, "checks_attempted" -> checked, "check_failures" -> failures,
       "trace" -> traced)
   }
@@ -283,16 +277,20 @@ object Hub {
       ("pref", (s, b) => StreamPref.pairs(s, s"$b/pref"), "q_preference_pairs"))
 
   /** Batches admitted before the measured window opens. */
-  val WarmBatches = 1
+  val WarmBatches = 2
+
+  /** Batches the window admits at least: with the warm-up's, enough batch
+    * directories that a compaction has more than one to absorb. */
+  val MinBatches = 3
+
+  /** The logs IngestHub's maintainers auto-compact past
+    * DeltaLog.CompactThreshold batch directories. */
+  val CompactingLogs = Seq("vocab/log", "exactdedup/log", "index/postings",
+    "index/stats")
 
   def run(a: Args): Map[String, Any] = {
     val hub = s"${a.work}/hub"
-    // set-up: session and input load; the hub's warm-up is its first
-    // WarmBatches batches, admitted before the measured window opens
-    val (spark, setups) = setUp(a) { spark =>
-      spark.read.parquet(s"$hub/slices").count()
-    }
-    phase(a, "set-up done")
+    val spark = session(a)
     val trace = if (a.trace) Some(new Trace(spark)) else None
     val slices = Files.list(Paths.get(hub, "slices")).iterator.asScala
       .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
@@ -305,21 +303,25 @@ object Hub {
         .parquet(src.toString),
       base, Trigger.ProcessingTime(0L))
     val reads = Seq.newBuilder[Map[String, Any]]
+    val compactions = Seq.newBuilder[Map[String, Any]]
     var failed = 0
     val results = s"$hub/readouts"
-    // a reader's poll of the six readouts after the window; each result
-    // is kept for the output check
-    def poll(): Unit = readouts.foreach { case (name, readout, twin) =>
+    // a reader's poll of the six readouts; a measured poll's results are
+    // kept for the output check
+    def poll(measured: Boolean): Unit = readouts.foreach {
+        case (name, readout, twin) =>
       val t = now()
       try {
         val df = readout(spark, base)
         val rows = df.collect()
         val secs = now() - t
-        trace.foreach(_.addSpan(s"readout_$name", "hub",
-          (t * 1000).toLong, ((t + secs) * 1000).toLong))
-        reads += Map("name" -> name, "s" -> secs)
-        spark.createDataFrame(rows.toSeq.asJava, df.schema).coalesce(1)
-          .write.parquet(s"$results/$twin")
+        if (measured) {
+          trace.foreach(_.addSpan(s"readout_$name", "hub",
+            (t * 1000).toLong, ((t + secs) * 1000).toLong))
+          reads += Map("name" -> name, "s" -> secs)
+          spark.createDataFrame(rows.toSeq.asJava, df.schema).coalesce(1)
+            .write.parquet(s"$results/$twin")
+        }
       } catch { case e: Exception =>
         System.err.println(s"[perfbench] readout $name: ${e.getMessage}")
         failed += 1
@@ -341,20 +343,44 @@ object Hub {
           endOffset(p) >= k && p.durationMs.containsKey("addBatch"))
       }
     }
+    // compact a log between batches, as DeltaLog.maybeCompact does past
+    // its threshold (a 10 s window reaches too few batch directories for
+    // the program to do it on its own); the stream is idle here, since no
+    // slice is waiting
+    def compact(log: String): Unit = {
+      val t = now()
+      try {
+        val (before, after) = Compaction.compactLog(spark, s"$base/$log")
+        val secs = now() - t
+        trace.foreach(_.addSpan(s"compact_$log", "hub",
+          (t * 1000).toLong, ((t + secs) * 1000).toLong))
+        compactions += Map("log" -> log, "s" -> secs, "dirs_before" -> before,
+          "dirs_after" -> after)
+      } catch { case e: Exception =>
+        System.err.println(s"[perfbench] compaction $log: ${e.getMessage}")
+        failed += 1
+      }
+    }
     var admitted = 0
+    var setupS = 0.0
     try {
-      // warm-up, outside the window
+      // warm-up, outside the window: a first poll of the readouts (on the
+      // empty hub; a long-running hub's reader has polled before), then the
+      // first batches (the batch after a poll runs slower)
+      poll(measured = false)
       (0 until WarmBatches).foreach(admit)
       admitted = WarmBatches
-      phase(a, "warm-up done")
+      setupS = setUpDone(a)
       val t0 = now()
       while (admitted < slices.size &&
-          (admitted == WarmBatches || now() - t0 < a.seconds)) {
+          (admitted < WarmBatches + MinBatches || now() - t0 < a.seconds)) {
         admit(admitted)
         admitted += 1
       }
       phase(a, s"window closed after $admitted slices")
-      poll()
+      CompactingLogs.foreach(compact)
+      poll(measured = true)
+      phase(a, "readouts done")
     } catch { case e: Exception =>
       System.err.println(s"[perfbench] hub stream failed: ${e.getMessage}")
       failed += 1
@@ -378,31 +404,29 @@ object Hub {
     val ingested = s"$hub/ingested"
     spark.read.parquet(src.toString).coalesce(1).write
       .parquet(s"$ingested/documents.parquet")
-    Files.writeString(Paths.get(results, "oracle_sql.json"), Json.write(
+    Files.writeString(Paths.get(results, "oracle_sql.json"), toJson(
       readouts.flatMap { case (_, _, twin) =>
         Queries.byName(twin).oracle.map(twin -> _) }.toMap))
     val docs = spark.read.parquet(s"$ingested/documents.parquet").count()
-    Map("setup_s" -> setups, "batches" -> bs, "slices" -> admitted,
-      "docs" -> docs, "readouts" -> reads.result(), "failed_ops" -> failed,
+    Map("setup_s" -> setupS, "batches" -> bs, "slices" -> admitted,
+      "docs" -> docs, "readouts" -> reads.result(),
+      "compactions" -> compactions.result(), "failed_ops" -> failed,
       "base" -> base, "data" -> ingested, "check_dir" -> results,
       "twins" -> readouts.map(_._3), "trace" -> traced)
   }
 
-  /** Per-layer split of one hub batch: delta writes by maintainer, the
-    * compaction rewrites, and the rest of the trigger. */
+  /** Per-layer split of one hub batch: delta writes by maintainer and the
+    * rest of the trigger. */
   def batchLayers(w: Trace.Window, durMs: Long): Map[String, Any] = {
     def secs(xs: Seq[Trace.Action]) = xs.map(x => x.end - x.start).sum / 1000.0
-    val compact = w.actions.filter(_.path.endsWith(".compacting"))
-    val writes = w.actions.filterNot(compact.contains)
     Map(
       "batch_s" -> durMs / 1000.0,
       "jobs" -> w.jobs, "stages" -> w.stages, "tasks" -> w.tasks,
       "task_cpu_s" -> w.cpuS,
-      "compact_s" -> secs(compact), "compactions" -> compact.size,
       "driver_s" -> (durMs / 1000.0 - secs(w.actions)),
       "actions" -> actionRecords(w)) ++
       Seq("vocab", "exactdedup", "index", "ablate", "mix", "pref").map(m =>
-        s"write_s.$m" -> secs(writes.filter(_.path.contains(s"/base/$m/"))))
+        s"write_s.$m" -> secs(w.actions.filter(_.path.contains(s"/base/$m/"))))
   }
 }
 
@@ -414,15 +438,9 @@ object BatchSample {
     val data = s"${a.work}/data"
     val order = Files.readAllLines(Paths.get(a.work, "queries.txt")).asScala
       .map(_.trim).filter(_.nonEmpty).toSeq
-    val (spark, setups) = setUp(a) { spark =>
-      // generic warm-up: a scan, an aggregate and a join, through noop
-      val docs = spark.read.parquet(s"$data/documents.parquet")
-      docs.groupBy("lang").count().join(docs.select("lang", "doc_id"), "lang")
-        .write.format("noop").mode("overwrite").save()
-    }
-    phase(a, "set-up done")
+    val spark = session(a)
     // output check pass: each query's result for the DuckDB oracle compare;
-    // it is each query's first execution, so it also warms its code paths
+    // it is each query's first execution, so it is also the warm-up
     val check = s"${a.work}/check"
     var failed = 0
     order.foreach { n =>
@@ -433,9 +451,8 @@ object BatchSample {
         failed += 1
       } finally spark.catalog.clearCache()
     }
-    Files.writeString(Paths.get(check, "oracle_sql.json"), Json.write(
+    Files.writeString(Paths.get(check, "oracle_sql.json"), toJson(
       order.flatMap(n => Queries.byName(n).oracle.map(n -> _)).toMap))
-    phase(a, "check pass done")
     def execute(n: String): (Boolean, Double) = timed {
       try {
         Queries.byName(n).run(spark, data).write.format("noop")
@@ -447,12 +464,16 @@ object BatchSample {
       } finally spark.catalog.clearCache()
     }
     val trace = if (a.trace) Some(new Trace(spark)) else None
-    // timed: whole passes over the seeded order while the window is open,
-    // so every query runs the same number of times
+    val setupS = setUpDone(a)
+    // timed: the whole passes over the seeded order that fit the window (at
+    // least one), so every query runs the same number of times, and a pass
+    // that ends just inside the window does not add another
     val runs = Seq.newBuilder[Map[String, Any]]
     val t0 = now()
     var pass = 0
-    while (pass == 0 || now() - t0 < a.seconds) {
+    var passS = 0.0
+    while (pass == 0 || now() - t0 + passS <= a.seconds) {
+      val p0 = now()
       for (n <- order) {
         val start = now()
         val (ok, secs) = execute(n)
@@ -461,6 +482,7 @@ object BatchSample {
           ((start + secs) * 1000).toLong))
         runs += Map("query" -> n, "s" -> secs, "ok" -> ok, "pass" -> pass)
       }
+      passS = now() - p0
       pass += 1
     }
     phase(a, s"window closed after $pass passes")
@@ -481,7 +503,7 @@ object BatchSample {
       val r = Map("queries" -> per, "spans" -> t.spanRecords)
       t.close(); r
     }
-    Map("setup_s" -> setups, "runs" -> rs, "failed_ops" -> failed,
+    Map("setup_s" -> setupS, "runs" -> rs, "failed_ops" -> failed,
       "check_dir" -> check, "data" -> data, "trace" -> traced)
   }
 }
