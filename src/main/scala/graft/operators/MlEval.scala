@@ -1692,10 +1692,6 @@ object MlEval {
       .orderBy($"lang")
   }
 
-  /** Spec/direct entry: fits BOTH models (no memo). */
-  private[graft] def textClassifier2Report(docsIn: DataFrame): DataFrame =
-    clsEval2(docsIn, clsFit(docsIn), clsFit2(docsIn))
-
   /** The r12 task's full feature spec — "hashed unigram/bigram bucket
     * counts" (fastText's quality-filter shape; the landed
     * [[qTextClassifier]] is unigram-only): the SAME block-coordinate IRLS
@@ -1767,23 +1763,6 @@ object MlEval {
     }
   )
 
-  /** Mixture impact of the trained quality filter — the production
-    * question q_text_classifier's eval doesn't answer: apply the SAME
-    * trained model (shared [[clsTrain]] schedule) at the p > ½ operating
-    * point and report, per (lang, source) cell of the corpus mixture,
-    * document and TOKEN retention plus the kept-set's label purity. A
-    * curation team reads this next to q_temperature_mix/q_dsir_weights:
-    * the filter's effect IS a re-weighting of the training mixture, and a
-    * cell whose token_keep_rate collapses is a domain the filter is about
-    * to silently delete. Scale shape: SHARES q_text_classifier's trained
-    * model ([[clsFit]] + session memo — the bench pays the 8 IRLS rounds
-    * once for both queries) and runs its own single scoring pass; the
-    * readout is one |langs|×|sources| aggregate. */
-  private[graft] def filterImpactReport(docsIn: DataFrame): DataFrame = {
-    val (coef, beta) = clsFit(docsIn)
-    clsImpactReadout(clsScored(clsDocs(docsIn), coef, beta))
-  }
-
   /** Per-(lang, source) mixture-retention readout over a scored relation
     * — bounded output (≤|langs|·|sources| rows). */
   private def clsImpactReadout(sc: DataFrame): DataFrame = {
@@ -1807,6 +1786,18 @@ object MlEval {
       .orderBy($"lang", $"source")
   }
 
+  /** Mixture impact of the trained quality filter — the production
+    * question q_text_classifier's eval doesn't answer: apply the SAME
+    * trained model (shared [[clsTrain]] schedule) at the p > ½ operating
+    * point and report, per (lang, source) cell of the corpus mixture,
+    * document and TOKEN retention plus the kept-set's label purity. A
+    * curation team reads this next to q_temperature_mix/q_dsir_weights:
+    * the filter's effect IS a re-weighting of the training mixture, and a
+    * cell whose token_keep_rate collapses is a domain the filter is about
+    * to silently delete. Scale shape: SHARES q_text_classifier's trained
+    * model ([[clsFit]] + session memo — the bench pays the 8 IRLS rounds
+    * once for both queries) and runs its own single scoring pass; the
+    * readout is one |langs|×|sources| aggregate. */
   val qFilterImpact = GraftQuery(
     "q_filter_impact",
     (spark, dir) => {

@@ -5,7 +5,6 @@ import graft.operators.{CorpusQuality, LexicalStats, PipelineOps,
   TextAnalytics}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Composite document-ingest pipeline: ONE micro-batch stream feeding
@@ -28,8 +27,9 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * delta is value-identical to the standalone maintainer's (IngestHubSpec
   * pins all readouts bit-equal to the batch queries, plus delta-schema
   * equality against each module's DeltaDdl), written through the
-  * modules' shared writeDelta hooks so fixed-path recovery and
-  * auto-compaction behave exactly as standalone.
+  * modules' own declared logs ([[DeltaLog.Log]]) so the layout,
+  * fixed-path recovery and auto-compaction are exactly the standalone
+  * maintainer's.
   *
   * Each maintainer keeps its own delta log under `baseDir/<name>`, so
   * every readout stays bit-equal to its batch twin independently.
@@ -38,13 +38,12 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   * mode, so a replayed foreachBatch re-lands every log idempotently
   * (the shared StreamDq discipline).
   */
-object IngestHub {
+object IngestHub extends Maintainer {
 
   /** Advance every maintained log by one batch. Batches carry
     * (doc_id, text, lang, source). */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
+  protected def append(docsBatch: DataFrame, batchId: Long,
       baseDir: String): Unit = {
-    if (docsBatch.isEmpty) return
     val vs = CorpusQuality.AblationVariants
     // NOT repartitioned, deliberately: the StreamIvf single-partition
     // find does NOT transfer here — A/B at 10x volume measured p95
@@ -73,11 +72,11 @@ object IngestHub {
         explode(Text.tokens(col("text"))).as("term"): _*)
     try {
       // vocabulary spectrum: every token, stopwords kept
-      StreamVocab.writeDelta(
+      StreamVocab.Terms.write(
         toks.groupBy(col("term")).agg(count(lit(1)).as("cnt")),
         batchId, s"$baseDir/vocab")
       // exact-dedup registry: doc-level fingerprints (no tokens)
-      StreamExactDedup.writeDelta(
+      StreamExactDedup.Fps.write(
         batch.groupBy(md5(col("text")).as("fp"))
           .agg(min(col("doc_id")).as("min_id"), count(lit(1)).as("cnt")),
         batchId, s"$baseDir/exactdedup")
@@ -89,9 +88,11 @@ object IngestHub {
         .agg(count(lit(1)).as("tf"))
         .join(dl, "doc_id")
         .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-      val stats = flags.agg(count(lit(1)).as("n_docs"))
-        .crossJoin(kept.agg(count(lit(1)).as("sum_dl")))
-      StreamIndex.writeDeltas(postings, stats, batchId, s"$baseDir/index")
+      StreamIndex.Postings.write(postings, batchId, s"$baseDir/index")
+      StreamIndex.Stats.write(flags.agg(count(lit(1)).as("n_docs"))
+          .crossJoin(kept.agg(count(lit(1)).as("sum_dl")))
+          .coalesce(1), // 1 row
+        batchId, s"$baseDir/index")
       // filter ablation: bucket/gate-conditional counts, same relation
       val counts = toks.filter(col("bucket") <= 8)
         .groupBy(col("term")).agg(
@@ -103,16 +104,18 @@ object IngestHub {
       val docsKept = flags.filter(col("bucket") <= 7).agg(
         count(when(col(s"g_${vs.head}"), 1)).as(s"d_${vs.head}"),
         vs.tail.map(v => count(when(col(s"g_$v"), 1)).as(s"d_$v")): _*)
-      StreamAblate.writeDeltas(counts, docsKept, batchId, s"$baseDir/ablate")
+      StreamAblate.Counts.write(counts, batchId, s"$baseDir/ablate")
+      StreamAblate.Docs.write(docsKept.coalesce(1), // 1 row
+        batchId, s"$baseDir/ablate")
       // mixture weights: split counts per (source, term), same relation
-      StreamMix.writeDelta(
+      StreamMix.Counts.write(
         toks.filter(col("bucket") <= 8)
           .groupBy(col("source"), col("term"))
           .agg(count(when(col("bucket") <= 7, 1)).as("ctf"),
             count(when(col("bucket") === 8, 1)).as("vtf")),
         batchId, s"$baseDir/mix")
       // preference pairs: doc-level quality extrema (no tokens)
-      StreamPref.writeDelta(
+      StreamPref.Extrema.write(
         PipelineOps.prefGrouped(batch.select(col("lang"), col("source"),
           col("doc_id"), TextAnalytics.qualityCol.as("q"))),
         batchId, s"$baseDir/pref")
@@ -120,16 +123,4 @@ object IngestHub {
       flags.unpersist(); batch.unpersist()
     }
   }
-
-  /** Wire a streaming documents DataFrame (doc_id, text, lang, source)
-    * into all six maintainers. */
-  def run(docStream: DataFrame, baseDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, baseDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$baseDir/checkpoint")
-      .start()
 }

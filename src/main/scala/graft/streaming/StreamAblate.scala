@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.CorpusQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming filter-ablation maintainer — the growing-corpus twin of
   * q_filter_ablation: the per-rule "which filter buys perplexity" table,
@@ -26,9 +25,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Idempotent recovery: fixed `b<id>.parquet` paths in overwrite mode
   * (additive counters are not duplicate-insensitive — the StreamDq
-  * discipline); log compaction rides [[Compaction.compactLog]].
+  * discipline); the logs auto-compact past
+  * [[DeltaLog.CompactThreshold]] batch dirs.
   */
-object StreamAblate {
+object StreamAblate extends Maintainer {
 
   /** Delta-log schemas as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -40,49 +40,29 @@ object StreamAblate {
   private[graft] val DocsDdl: String =
     CorpusQuality.AblationVariants.map(v => s"d_$v BIGINT").mkString(",")
 
+  private[graft] val Counts = DeltaLog.Log("counts", "", CountsDdl)
+  private[graft] val Docs = DeltaLog.Log("docs", "", DocsDdl)
+
   /** Append one micro-batch's count deltas. Batches carry
     * (doc_id, text). */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
+  protected def append(docsBatch: DataFrame, batchId: Long,
       logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    writeDeltas(CorpusQuality.ablTfw(docsBatch),
-      CorpusQuality.ablDocsKept(docsBatch), batchId, logDir)
+    Counts.write(CorpusQuality.ablTfw(docsBatch), batchId, logDir)
+    Docs.write(CorpusQuality.ablDocsKept(docsBatch).coalesce(1), // 1 row
+      batchId, logDir)
   }
-
-  /** Delta writers (fixed-path overwrite) — shared with IngestHub's
-    * tokenize-once path. `docsKept` is 1 row. */
-  private[graft] def writeDeltas(counts: DataFrame, docsKept: DataFrame,
-      batchId: Long, logDir: String): Unit = {
-    counts.write.mode("overwrite")
-      .parquet(s"$logDir/counts/b$batchId.parquet")
-    docsKept.coalesce(1) // 1 row
-      .write.mode("overwrite")
-      .parquet(s"$logDir/docs/b$batchId.parquet")
-  }
-
-  /** Wire a streaming documents DataFrame (doc_id, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
 
   /** The live ablation table — q_filter_ablation bit-equal on the corpus
     * streamed so far: fold both logs by their additive sums, then the
     * shared report. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
     val vs = CorpusQuality.AblationVariants
-    val counts = DeltaLog.emptyOr(spark, s"$logDir/counts", CountsDdl)
+    val counts = Counts.read(spark, logDir)
       .groupBy(col("term")).agg(
         sum(col(s"c_${vs.head}")).as(s"c_${vs.head}"),
         vs.tail.map(v => sum(col(s"c_$v")).as(s"c_$v"))
           :+ sum(col("vtf")).as("vtf"): _*)
-    val docs = DeltaLog.emptyOr(spark, s"$logDir/docs", DocsDdl)
+    val docs = Docs.read(spark, logDir)
       .agg(sum(col(s"d_${vs.head}")).as(s"d_${vs.head}"),
         vs.tail.map(v => sum(col(s"d_$v")).as(s"d_$v")): _*)
     CorpusQuality.ablReport(counts, docs)

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.BehaviorAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming causal-readout maintainer — the incremental twin of
   * q_strata_ate (graft.operators.BehaviorAnalytics): the maintained
@@ -22,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `cells_b<id>.parquet` path in overwrite
   * mode (the StreamDq discipline).
   */
-object StreamAte {
+object StreamAte extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -32,33 +31,20 @@ object StreamAte {
     "stratum STRING,t BIGINT,n BIGINT,sx_d DECIMAL(38,9)" +
       ",sxx_d DECIMAL(38,9)"
 
-  /** Append one micro-batch's cell-moment delta (≤ |types|·2 rows). */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    BehaviorAnalytics.strataCellMomentsDec(eventsBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
-  }
+  private val Cells = DeltaLog.Log("log", "cells_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_type, user_id, value) into
-    * the maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's cell-moment delta (≤ |types|·2 rows).
+    * Batches carry (event_type, user_id, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Cells.write(BehaviorAnalytics.strataCellMomentsDec(eventsBatch)
+      .coalesce(1), batchId, logDir)
 
   /** The live stratified-ATE readout from the cell-moment log alone. */
   def report(spark: SparkSession, logDir: String): DataFrame =
     BehaviorAnalytics.strataAteReport(
       BehaviorAnalytics.strataFinish(
-        DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+        Cells.read(spark, logDir)
           .groupBy(col("stratum"), col("t"))
           .agg(sum(col("n")).as("n"),
             sum(col("sx_d")).as("sx_d"), sum(col("sxx_d")).as("sxx_d"))))

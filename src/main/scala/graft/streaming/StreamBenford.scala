@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Governance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming Benford digit-audit maintainer — the incremental twin of
   * q_benford (Governance.qBenford), keeping the house invariant that every
@@ -25,7 +24,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * replace-my-batch is CORRECTNESS on checkpoint-recovery replay (the
   * StreamDq discipline).
   */
-object StreamBenford {
+object StreamBenford extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -34,31 +33,19 @@ object StreamBenford {
   private[graft] val DeltaDdl =
     "digit INT,n BIGINT"
 
-  /** Append one micro-batch's digit-count deltas to the log. */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    Governance.benfordCounts(eventsBatch)
-      .coalesce(1) // ≤ 9 rows
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/digits_b$batchId.parquet")
-  }
+  private val Digits = DeltaLog.Log("log", "digits_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (needs a `value` column) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's digit-count deltas to the log. Batches
+    * need a `value` column. */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Digits.write(
+      Governance.benfordCounts(eventsBatch).coalesce(1), // ≤ 9 rows
+      batchId, logDir)
 
   /** The live digit counters from the delta log alone: one digit fold. */
   def counts(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Digits.read(spark, logDir)
     log.groupBy(col("digit")).agg(sum(col("n")).as("n"))
   }
 

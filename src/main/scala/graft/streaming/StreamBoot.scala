@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.BehaviorAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Streaming bootstrap-CI maintainer — the incremental twin of
@@ -25,7 +24,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * Idempotent recovery: fixed `cells_b<id>.parquet` path in overwrite
   * mode (the StreamDq discipline).
   */
-object StreamBoot {
+object StreamBoot extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -34,11 +33,13 @@ object StreamBoot {
   private[graft] val DeltaDdl =
     "b INT,ws_dec DECIMAL(38,9),wn BIGINT"
 
+  private val Cells = DeltaLog.Log("log", "cells_", DeltaDdl)
+
   /** Append one micro-batch's replica-sum deltas (+ the b = −1 point
-    * row: ws = Σ value as decimal, wn = row count). */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
+    * row: ws = Σ value as decimal, wn = row count). Batches carry
+    * (event_id, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
       logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
     val spark = eventsBatch.sparkSession
     import spark.implicits._
     val reps = BehaviorAnalytics.bootWeights(eventsBatch)
@@ -49,29 +50,15 @@ object StreamBoot {
         sum($"value".cast(DecimalType(38, 9))).as("ws_dec"),
         count(lit(1)).as("wn"))
       .select(lit(-1).as("b"), $"ws_dec", $"wn")
-    reps.unionByName(point)
-      .coalesce(1) // ≤ B + 1 rows
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
+    Cells.write(reps.unionByName(point).coalesce(1), // ≤ B + 1 rows
+      batchId, logDir)
   }
-
-  /** Wire a streaming events DataFrame (event_id, value) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
 
   /** The live CI from the delta log alone: exact decimal fold, ONE
     * terminal round per reduction — then the shared report. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
     import spark.implicits._
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Cells.read(spark, logDir)
       .groupBy($"b")
       .agg(sum($"ws_dec").as("ws_dec"), sum($"wn").as("wn"))
     val reps = log.filter($"b" >= 0)

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.TextAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming BPE trainer maintainer — the incremental twin of
   * q_bpe_train: an ingest stream of documents keeps the corpus
@@ -29,7 +28,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * replace-my-batch is CORRECTNESS on checkpoint-recovery replay (the
   * StreamCms/StreamKn discipline).
   */
-object StreamBpe {
+object StreamBpe extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -38,30 +37,17 @@ object StreamBpe {
   private[graft] val DeltaDdl =
     "word STRING,freq BIGINT"
 
-  /** Append one micro-batch's word-frequency delta to the log. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    TextAnalytics.bpeWordFreqs(docsBatch)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
-  }
+  private val Freqs = DeltaLog.Log("log", "cells_", DeltaDdl)
 
-  /** Wire a streaming documents DataFrame (doc_id, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's word-frequency delta to the log. Batches
+    * carry (doc_id, text). */
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Freqs.write(TextAnalytics.bpeWordFreqs(docsBatch), batchId, logDir)
 
   /** The live (word, freq) vocabulary from the delta log alone. */
   def wordFreqs(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Freqs.read(spark, logDir)
     log.groupBy(col("word")).agg(sum(col("freq")).as("freq"))
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.{MlEval, TextAnalytics}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming Bradley–Terry maintainer — the provenance-strength ladder
   * (q_bradley_terry) kept LIVE over a growing corpus: each crawl
@@ -34,41 +33,25 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * is correctness on checkpoint-recovery replay (the StreamDq
   * discipline).
   */
-object StreamBt {
+object StreamBt extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] —
     * [[DeltaLog.emptyOr]] serves it when the maintainer is fresh. */
   private[graft] val HistDdl = "source STRING,v DOUBLE,c BIGINT"
 
+  private val Hist = DeltaLog.Log("hist", "", HistDdl)
+
   /** Append one micro-batch's histogram delta. Batches carry
     * (source, text); scoring is identical to the batch query's. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    val spark = docsBatch.sparkSession
-    MlEval.btHistOf(
-        docsBatch.select(col("source"),
-          TextAnalytics.qualityCol.as("q")))
-      .write.mode("overwrite").parquet(s"$logDir/hist/b$batchId.parquet")
-    DeltaLog.maybeCompact(spark, s"$logDir/hist")
-  }
-
-  /** Wire a streaming documents DataFrame (source, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Hist.write(MlEval.btHistOf(docsBatch.select(col("source"),
+      TextAnalytics.qualityCol.as("q"))), batchId, logDir)
 
   /** The live strength ladder from the log alone — q_bradley_terry
     * bit-equal on the corpus streamed so far. */
   def strengths(spark: SparkSession, logDir: String): DataFrame =
     MlEval.bradleyTerryFromHist(
-      DeltaLog.emptyOr(spark, s"$logDir/hist", HistDdl)
+      Hist.read(spark, logDir)
         .groupBy(col("source"), col("v")).agg(sum(col("c")).as("c")))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.MlEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming calibration monitor — the incremental twin of BOTH
   * q_calibration_bins (ECE) and q_brier_decomp (Murphy decomposition):
@@ -22,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `bins_b<id>.parquet` path in overwrite
   * mode (the StreamDq discipline).
   */
-object StreamCal {
+object StreamCal extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -32,30 +31,16 @@ object StreamCal {
     "bin BIGINT,n BIGINT,n_pos BIGINT,sp DECIMAL(38,9)" +
       ",spp DECIMAL(38,6),spy DECIMAL(38,9)"
 
-  /** Append one micro-batch's bin-counter delta (≤ 10 rows). */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    MlEval.calBinsDec(eventsBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/bins_b$batchId.parquet")
-  }
+  private val Bins = DeltaLog.Log("log", "bins_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_type, value) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's bin-counter delta (≤ 10 rows). Batches
+    * carry (event_type, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Bins.write(MlEval.calBinsDec(eventsBatch).coalesce(1), batchId, logDir)
 
   private def folded(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    Bins.read(spark, logDir)
       .groupBy(col("bin"))
       .agg(sum(col("n")).as("n"), sum(col("n_pos")).as("n_pos"),
         sum(col("sp")).as("sp"), sum(col("spp")).as("spp"),

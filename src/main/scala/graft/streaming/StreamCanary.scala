@@ -4,7 +4,6 @@ import graft.functions.Text
 import graft.operators.CorpusQuality
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming canary-exposure maintainer — the memorization-risk audit
   * (q_canary_exposure) kept LIVE over a growing corpus, so each crawl
@@ -41,54 +40,41 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * is correctness on checkpoint-recovery replay (the StreamDq
   * discipline).
   */
-object StreamCanary {
+object StreamCanary extends Maintainer {
 
   /** Delta-log schemas as written by [[processBatch]] —
     * [[DeltaLog.emptyOr]] serves these when the maintainer is fresh. */
   private[graft] val GramDdl = "canary STRING,occ BIGINT"
   private[graft] val TermDdl = "term STRING,cnt BIGINT"
 
+  private val Grams = DeltaLog.Log("grams", "", GramDdl)
+  private val Terms = DeltaLog.Log("terms", "", TermDdl)
+
   /** Append one micro-batch's gram-occurrence and term-count deltas.
     * Batches carry (doc_id, text); tokenization and shingling are
     * identical to the batch query's. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
+  protected def append(docsBatch: DataFrame, batchId: Long,
       logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    val spark = docsBatch.sparkSession
     // two consumers of the same batch scan — cache the (one-file-sized)
     // batch, not its exploded derivations
     val b = docsBatch.persist()
     try {
-      b.select(explode(call_function("word_shingles_all", col("text"),
-          lit(CorpusQuality.CanaryN))).as("canary"))
-        .groupBy(col("canary")).agg(count(lit(1)).as("occ"))
-        .write.mode("overwrite").parquet(s"$logDir/grams/b$batchId.parquet")
-      DeltaLog.maybeCompact(spark, s"$logDir/grams")
-      b.select(explode(Text.tokens(col("text"))).as("term"))
-        .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-        .write.mode("overwrite").parquet(s"$logDir/terms/b$batchId.parquet")
-      DeltaLog.maybeCompact(spark, s"$logDir/terms")
+      Grams.write(b.select(explode(call_function("word_shingles_all",
+          col("text"), lit(CorpusQuality.CanaryN))).as("canary"))
+        .groupBy(col("canary")).agg(count(lit(1)).as("occ")),
+        batchId, logDir)
+      Terms.write(b.select(explode(Text.tokens(col("text"))).as("term"))
+        .groupBy(col("term")).agg(count(lit(1)).as("cnt")),
+        batchId, logDir)
     } finally b.unpersist()
   }
-
-  /** Wire a streaming documents DataFrame (doc_id, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
 
   /** The live exposure ledger from the logs alone — q_canary_exposure
     * bit-equal on the corpus streamed so far. */
   def exposure(spark: SparkSession, logDir: String): DataFrame = {
-    val gramOcc = DeltaLog.emptyOr(spark, s"$logDir/grams", GramDdl)
+    val gramOcc = Grams.read(spark, logDir)
       .groupBy(col("canary")).agg(sum(col("occ")).as("occ"))
-    val cf = DeltaLog.emptyOr(spark, s"$logDir/terms", TermDdl)
+    val cf = Terms.read(spark, logDir)
       .groupBy(col("term")).agg(sum(col("cnt")).as("cf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     CorpusQuality.canaryExposureOf(gramOcc, cf)

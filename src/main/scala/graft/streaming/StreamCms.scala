@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Profiling
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming Count-Min sketch maintainer — the incremental twin of
   * q_cms_heavy (Profiling.qCmsHeavy), completing the mergeable-sketch
@@ -26,7 +25,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * replace-my-batch is CORRECTNESS on checkpoint-recovery replay (the
   * StreamDq discipline).
   */
-object StreamCms {
+object StreamCms extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -35,30 +34,19 @@ object StreamCms {
   private[graft] val DeltaDdl =
     "r INT,bucket BIGINT,c BIGINT"
 
-  /** Append one micro-batch's sketch-cell deltas to the log. */
-  def processBatch(termsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (termsBatch.isEmpty) return
-    Profiling.cmsCells(termsBatch)
-      .coalesce(1) // ≤ d·w rows
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
-  }
+  private val Cells = DeltaLog.Log("log", "cells_", DeltaDdl)
 
-  /** Wire a streaming (term) DataFrame into the maintainer. */
-  def run(termStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    termStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's sketch-cell deltas to the log. Batches
+    * carry (term). */
+  protected def append(termsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Cells.write(
+      Profiling.cmsCells(termsBatch).coalesce(1), // ≤ d·w rows
+      batchId, logDir)
 
   /** The live sketch from the delta log alone: one (r, bucket) fold. */
   def sketch(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Cells.read(spark, logDir)
     log.groupBy(col("r"), col("bucket")).agg(sum(col("c")).as("c"))
   }
 }

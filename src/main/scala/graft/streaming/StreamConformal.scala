@@ -4,7 +4,6 @@ import graft.functions.Det
 import graft.operators.MlEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Streaming split-conformal maintainer — the incremental twin of
@@ -33,7 +32,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * batch query. Idempotent recovery: fixed `vc_b<id>.parquet` path in
   * overwrite mode (the StreamDq discipline).
   */
-object StreamConformal {
+object StreamConformal extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -42,32 +41,20 @@ object StreamConformal {
   private[graft] val DeltaDdl =
     "event_type STRING,bucket BIGINT,v DOUBLE,cnt BIGINT"
 
-  /** Append one micro-batch's (type, bucket, value) count delta. */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    MlEval.conformalCounts(eventsBatch)
-      .coalesce(1) // value-domain-sized
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/vc_b$batchId.parquet")
-  }
+  private val Counts = DeltaLog.Log("log", "vc_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_id, event_type, value) into
-    * the maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's (type, bucket, value) count delta.
+    * Batches carry (event_id, event_type, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Counts.write(
+      MlEval.conformalCounts(eventsBatch).coalesce(1), // value-domain-sized
+      batchId, logDir)
 
   /** The live band + coverage from the count log alone. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
     import spark.implicits._
-    val vc = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val vc = Counts.read(spark, logDir)
       .groupBy($"event_type", $"bucket", $"v")
       .agg(sum($"cnt").as("cnt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

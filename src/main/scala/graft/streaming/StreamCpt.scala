@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.EventAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming changepoint monitor — the incremental twin of q_changepoint
   * (graft.operators.EventAnalytics): the maintained relation is the
@@ -22,7 +21,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `days_b<id>.parquet` path in overwrite
   * mode (the StreamDq discipline).
   */
-object StreamCpt {
+object StreamCpt extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -31,33 +30,19 @@ object StreamCpt {
   private[graft] val DeltaDdl =
     "day BIGINT,v_d DECIMAL(38,9)"
 
-  /** Append one micro-batch's daily-mass delta (≤ |days| rows). */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    EventAnalytics.cptDailyDec(eventsBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/days_b$batchId.parquet")
-  }
+  private val Days = DeltaLog.Log("log", "days_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (ts_us, value) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's daily-mass delta (≤ |days| rows). Batches
+    * carry (ts_us, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Days.write(EventAnalytics.cptDailyDec(eventsBatch).coalesce(1), batchId, logDir)
 
   /** The live AMOC scan from the daily-mass log alone. */
   def report(spark: SparkSession, logDir: String): DataFrame =
     EventAnalytics.cptReport(
       EventAnalytics.cptFinish(
-        DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+        Days.read(spark, logDir)
           .groupBy(col("day"))
           .agg(sum(col("v_d")).as("v_d"))))
 }

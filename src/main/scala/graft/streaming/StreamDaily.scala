@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.EventAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Streaming daily-series maintainer — ONE maintained relation serving the
@@ -28,7 +27,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * mode (the StreamDq discipline — partial sums are not
   * duplicate-insensitive).
   */
-object StreamDaily {
+object StreamDaily extends Maintainer {
 
   private val DayUs = 24L * 3600 * 1000000
 
@@ -39,72 +38,42 @@ object StreamDaily {
   private[graft] val DeltaDdl =
     "event_type STRING,day BIGINT,vdec DECIMAL(38,9),n BIGINT"
 
-  /** Append one micro-batch's (event_type, day) decimal partial sums. */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    eventsBatch
+  private val Days = DeltaLog.Log("log", "days_", DeltaDdl)
+
+  /** Append one micro-batch's (event_type, day) decimal partial sums.
+    * Batches carry (event_type, ts_us, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Days.write(eventsBatch
       .withColumn("day", expr(s"ts_us div $DayUs"))
       .groupBy(col("event_type"), col("day"))
       .agg(sum(col("value").cast(DecimalType(38, 9))).as("vdec"),
         count(lit(1)).as("n"))
-      .coalesce(1) // ≤ |types| × |days touched by the batch| rows
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/days_b$batchId.parquet")
-  }
-
-  /** Wire a streaming events DataFrame (event_type, ts_us, value) into
-    * the maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+      .coalesce(1), // ≤ |types| × |days touched by the batch| rows
+      batchId, logDir)
 
   /** The live daily series from the delta log alone: exact decimal fold,
     * ONE terminal 6-dp round — bit-identical to the batch dailyByType. */
   def series(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Days.read(spark, logDir)
     log.groupBy(col("event_type"), col("day"))
       .agg(round(sum(col("vdec")), 6).cast(DoubleType).as("v"))
-  }
-
-  /** The last readout's series plan per logDir — the report cores
-    * eager-persist the daily series at construction, and the live monitor
-    * path has no clearCache-between-queries protocol (unlike
-    * Verify/Bench/Prof), so repeated micro-batch readouts would accumulate
-    * one MEMORY_AND_DISK entry per log state. Dropping the PREVIOUS entry
-    * when the log has advanced bounds the footprint to one live series per
-    * logDir; a readout over the UNCHANGED log keeps the entry, and
-    * Tables.eager's skip-if-cached guard then reuses it across all four
-    * readouts instead of re-counting. */
-  private val lastSeries =
-    new scala.collection.concurrent.TrieMap[String, DataFrame]()
-
-  private def readoutSeries(spark: SparkSession, logDir: String): DataFrame = {
-    val s = series(spark, logDir)
-    lastSeries.put(logDir, s).foreach { prev =>
-      if (!prev.queryExecution.analyzed.sameResult(s.queryExecution.analyzed))
-        prev.unpersist()
-    }
-    s
   }
 
   /** The four family readouts over the folded series — identical
     * machinery (and, by the fold equality, identical values) to
     * q_autocorr / q_stl_decompose / q_seasonal_forecast / q_ljung_box.
     * The last is the LIVE white-noise monitor: a forecaster's residual
-    * check that updates per micro-batch without re-scanning history. */
+    * check that updates per micro-batch without re-scanning history. The
+    * stl and forecast cores eager-persist the series; a later poll over
+    * the same log reuses that one cache entry, which the delta-log read
+    * refreshes once new batches have landed. */
   def autocorr(spark: SparkSession, logDir: String): DataFrame =
-    EventAnalytics.autocorrReport(readoutSeries(spark, logDir))
+    EventAnalytics.autocorrReport(series(spark, logDir))
   def stl(spark: SparkSession, logDir: String): DataFrame =
-    EventAnalytics.stlReport(readoutSeries(spark, logDir))
+    EventAnalytics.stlReport(series(spark, logDir))
   def forecast(spark: SparkSession, logDir: String): DataFrame =
-    EventAnalytics.forecastReport(readoutSeries(spark, logDir))
+    EventAnalytics.forecastReport(series(spark, logDir))
   def ljungBox(spark: SparkSession, logDir: String): DataFrame =
-    EventAnalytics.ljungBoxReport(readoutSeries(spark, logDir))
+    EventAnalytics.ljungBoxReport(series(spark, logDir))
 }

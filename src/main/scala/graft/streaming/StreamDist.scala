@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.BehaviorAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming two-sample distribution monitor — the incremental twin of
   * the whole value-distribution test family at once: q_ks_test (max ECDF
@@ -29,7 +28,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `counts_b<id>.parquet` path in overwrite
   * mode (the StreamDq discipline).
   */
-object StreamDist {
+object StreamDist extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -38,30 +37,16 @@ object StreamDist {
   private[graft] val DeltaDdl =
     "value DOUBLE,c1 BIGINT,c2 BIGINT"
 
-  /** Append one micro-batch's per-value arm-count delta. */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    BehaviorAnalytics.armValueCounts(eventsBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/counts_b$batchId.parquet")
-  }
+  private val Counts = DeltaLog.Log("log", "counts_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_type, value) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's per-value arm-count delta. Batches carry
+    * (event_type, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Counts.write(BehaviorAnalytics.armValueCounts(eventsBatch).coalesce(1), batchId, logDir)
 
   private def folded(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    Counts.read(spark, logDir)
       .groupBy(col("value"))
       .agg(sum(col("c1")).as("c1"), sum(col("c2")).as("c2"))
 

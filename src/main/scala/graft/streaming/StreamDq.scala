@@ -35,7 +35,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamDq {
 
-
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
     * empty relation in this schema when the maintainer is fresh (no
@@ -46,33 +45,27 @@ object StreamDq {
       ",v_returnflag_domain BIGINT,v_ship_after_order BIGINT" +
       ",v_fk_order_exists BIGINT"
 
+  private val Counters = DeltaLog.Log("log", "counters_", DeltaDdl)
+
   /** Audit one micro-batch of lineitem-shaped rows against the static
     * orders dim; append its counter row to the log. */
   def processBatch(liBatch: DataFrame, orders: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    val spark = liBatch.sparkSession
-    if (liBatch.isEmpty) return
-    Governance.dqCounters(liBatch, broadcast(orders))
-      .coalesce(1) // one counter row
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/counters_b$batchId.parquet")
-  }
+      logDir: String): Unit =
+    DeltaLog.ifNonEmpty(liBatch)(Counters.write(
+      Governance.dqCounters(liBatch, broadcast(orders))
+        .coalesce(1), // one counter row
+      batchId, logDir))
 
   /** Wire a streaming lineitem DataFrame into the gate. `orders` is the
     * static dimension (broadcast per batch — stream-static join). */
   def run(liStream: DataFrame, orders: DataFrame, logDir: String,
-          trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    liStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, orders, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+      trigger: Trigger = DeltaLog.DefaultTrigger): StreamingQuery =
+    DeltaLog.run(liStream, logDir, trigger)(processBatch(_, orders, _, logDir))
 
   /** The all-time per-rule report from the counter log alone: one
     * column-wise sum over O(batches) rows, then the shared unpivot. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Counters.read(spark, logDir)
     Governance.dqStack(log.agg(
       sum(col("n_checked")).as("n_checked"),
       sum(col("v_quantity_range")).as("v_quantity_range"),

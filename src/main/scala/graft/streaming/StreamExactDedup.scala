@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming exact-dedup REGISTRY maintainer — the global twin of
   * q_dedup_exact for a growing corpus. [[StreamDedup]] answers the
@@ -23,50 +22,29 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `fp_b<id>.parquet` path in overwrite mode
   * (the StreamDq discipline). The log compacts AUTOMATICALLY past
   * [[DeltaLog.CompactThreshold]] batch dirs ([[DeltaLog.maybeCompact]]
-  * after every append; AutoCompactSpec pins bit-equality across the
+  * after every write; AutoCompactSpec pins bit-equality across the
   * boundary).
   */
-object StreamExactDedup {
+object StreamExactDedup extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
     * empty relation in this schema when the maintainer is fresh. */
   private[graft] val DeltaDdl = "fp STRING,min_id BIGINT,cnt BIGINT"
 
+  private[graft] val Fps = DeltaLog.Log("log", "fp_", DeltaDdl)
+
   /** Append one micro-batch's per-fingerprint delta. Batches carry
     * (doc_id, text). */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    writeDelta(docsBatch
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Fps.write(docsBatch
       .groupBy(md5(col("text")).as("fp"))
       .agg(min(col("doc_id")).as("min_id"), count(lit(1)).as("cnt")),
       batchId, logDir)
-  }
-
-  /** Delta writer (fixed-path overwrite + auto-compaction) — shared with
-    * IngestHub. */
-  private[graft] def writeDelta(delta: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    delta.write.mode("overwrite")
-      .parquet(s"$logDir/log/fp_b$batchId.parquet")
-    DeltaLog.maybeCompact(delta.sparkSession, s"$logDir/log")
-  }
-
-  /** Wire a streaming documents DataFrame (doc_id, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
 
   private def folded(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    Fps.read(spark, logDir)
       .groupBy(col("fp"))
       .agg(min(col("min_id")).as("keep_id"), sum(col("cnt")).as("n_copies"))
 

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.BehaviorAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming multiple-testing maintainer — the incremental twin of
   * q_bh_fdr (graft.operators.BehaviorAnalytics): the maintained relation
@@ -24,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * mode (the StreamDq discipline) — a replayed batch overwrites its own
   * delta rather than double-counting.
   */
-object StreamFdr {
+object StreamFdr extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -34,27 +33,13 @@ object StreamFdr {
     "event_type STRING,hour BIGINT,n BIGINT,sx_d DECIMAL(38,9)" +
       ",sxx_d DECIMAL(38,9)"
 
-  /** Append one micro-batch's cell-moment delta (≤ |types|·24 rows). */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    BehaviorAnalytics.fdrCellMomentsDec(eventsBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
-  }
+  private val Cells = DeltaLog.Log("log", "cells_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_type, ts_us, value) into
-    * the maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's cell-moment delta (≤ |types|·24 rows).
+    * Batches carry (event_type, ts_us, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Cells.write(BehaviorAnalytics.fdrCellMomentsDec(eventsBatch).coalesce(1), batchId, logDir)
 
   /** The live BH-FDR screen from the cell-moment log alone: fold the
     * per-batch deltas by (event_type, hour), round once, re-run the
@@ -63,7 +48,7 @@ object StreamFdr {
   def report(spark: SparkSession, logDir: String): DataFrame =
     BehaviorAnalytics.bhReport(
       BehaviorAnalytics.fdrFinish(
-        DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+        Cells.read(spark, logDir)
           .groupBy(col("event_type"), col("hour"))
           .agg(sum(col("n")).as("n"),
             sum(col("sx_d")).as("sx_d"), sum(col("sxx_d")).as("sxx_d"))))

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Clustering
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming GMM maintainer — the incremental twin of q_gmm_em
   * (graft.operators.Clustering): a maintained model REFIT. EM itself is
@@ -18,7 +17,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `vc_b<id>.parquet` path in overwrite mode
   * (the StreamDq discipline).
   */
-object StreamGmm {
+object StreamGmm extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -27,31 +26,20 @@ object StreamGmm {
   private[graft] val DeltaDdl =
     "v DOUBLE,c BIGINT"
 
-  /** Append one micro-batch's value-domain count delta. */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    Clustering.gmmValueCounts(eventsBatch)
-      .coalesce(1) // value-domain-sized
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/vc_b$batchId.parquet")
-  }
+  private val Counts = DeltaLog.Log("log", "vc_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (value) into the maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's value-domain count delta. Batches carry
+    * (value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Counts.write(
+      Clustering.gmmValueCounts(eventsBatch).coalesce(1), // value-domain-sized
+      batchId, logDir)
 
   /** The live fit from the count log alone: integer fold by value, then
     * the shared two-iteration EM report. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
-    val vc = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val vc = Counts.read(spark, logDir)
       .groupBy(col("v"))
       .agg(sum(col("c")).as("c"))
     Clustering.gmmReport(vc)

@@ -47,38 +47,32 @@ object StreamHist {
     * error — only the not-yet-started delta log degrades). */
   private[graft] val DeltaDdl = "bin BIGINT,n BIGINT"
 
+  private val Bins = DeltaLog.Log("log", "hist_", DeltaDdl)
+
   /** Bin one micro-batch of (value) rows against the frozen bounds;
     * append its ≤HistBins count rows to the log. */
   def processBatch(batch: DataFrame, refDir: String, batchId: Long,
-      logDir: String): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val ref = spark.read.parquet(refDir).limit(1)
-    batch.crossJoin(broadcast(ref))
-      .withColumn("bin", Governance.psiBinCol(col("value"), col("vlo"),
-        col("width"), Governance.HistBins))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/hist_b$batchId.parquet")
-  }
+      logDir: String): Unit =
+    DeltaLog.ifNonEmpty(batch) {
+      val ref = batch.sparkSession.read.parquet(refDir).limit(1)
+      Bins.write(batch.crossJoin(broadcast(ref))
+        .withColumn("bin", Governance.psiBinCol(col("value"), col("vlo"),
+          col("width"), Governance.HistBins))
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("n"))
+        .coalesce(1), batchId, logDir)
+    }
 
   /** Wire a streaming (value) DataFrame into the maintainer. */
   def run(values: DataFrame, refDir: String, logDir: String,
-          trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    values.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, refDir, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+      trigger: Trigger = DeltaLog.DefaultTrigger): StreamingQuery =
+    DeltaLog.run(values, logDir, trigger)(processBatch(_, refDir, _, logDir))
 
   /** Approx quantiles of the accumulated stream from the bin log alone:
     * fold, rebuild the merged-histogram shape, shared lookup. */
   def report(spark: SparkSession, refDir: String, logDir: String): DataFrame = {
     val ref = spark.read.parquet(refDir).limit(1)
-    val folded = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val folded = Bins.read(spark, logDir)
       .groupBy(col("bin")).agg(sum(col("n")).as("cnt"))
       .crossJoin(broadcast(ref))
       .withColumn("cum", sum(col("cnt")).over(Window.orderBy(col("bin"))))

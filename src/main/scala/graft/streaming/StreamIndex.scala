@@ -4,7 +4,6 @@ import graft.functions.Text
 import graft.operators.Retrieval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming retrieval-index maintainer — ONE maintained inverted-index
   * delta log serving BOTH lexical rankers bit-equal to their batch twins:
@@ -34,7 +33,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Scale shape: the per-batch delta is one batch-sized groupBy; both
   * logs compact AUTOMATICALLY past [[DeltaLog.CompactThreshold]] batch
-  * dirs ([[DeltaLog.maybeCompact]] after every append; AutoCompactSpec
+  * dirs ([[DeltaLog.maybeCompact]] after every write; AutoCompactSpec
   * pins bit-equality across the boundary). Document UPDATES are out of scope
   * by contract (append-only corpus) — a mutable corpus replaces its
   * batch file, which the fixed `b<id>.parquet` overwrite layout already
@@ -45,7 +44,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * is correctness on checkpoint-recovery replay (the StreamDq
   * discipline).
   */
-object StreamIndex {
+object StreamIndex extends Maintainer {
 
   /** Delta-log schemas as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -55,12 +54,14 @@ object StreamIndex {
     "doc_id BIGINT,term STRING,tf BIGINT,dl INT"
   private[graft] val StatsDdl = "n_docs BIGINT,sum_dl BIGINT"
 
+  private[graft] val Postings = DeltaLog.Log("postings", "", PostingsDdl)
+  private[graft] val Stats = DeltaLog.Log("stats", "", StatsDdl)
+
   /** Append one micro-batch's postings + corpus-stats deltas. Batches
     * carry (doc_id, text); tokenization (lowercase, whitespace split,
     * stopword removal) is identical to the batch rankers'. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
+  protected def append(docsBatch: DataFrame, batchId: Long,
       logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
     // ONE tokenizer call site (the IngestHub tokenize-once discipline —
     // this method used to tokenize the batch twice, once per delta): a
     // doc-level (doc_id, toks) view over the cached batch feeds BOTH the
@@ -75,38 +76,12 @@ object StreamIndex {
         Text.tokensNostop(col("text")).as("toks"))
       val toks = docToks.select(col("doc_id"), size(col("toks")).as("dl"),
         explode(col("toks")).as("term"))
-      writeDeltas(Retrieval.tfOf(toks),
-        docToks.agg(count(lit(1)).as("n_docs"),
-          sum(size(col("toks"))).as("sum_dl")),
+      Postings.write(Retrieval.tfOf(toks), batchId, logDir)
+      Stats.write(docToks.agg(count(lit(1)).as("n_docs"),
+          sum(size(col("toks"))).as("sum_dl")).coalesce(1), // 1 row
         batchId, logDir)
     } finally batch.unpersist()
   }
-
-  /** Delta writers (fixed-path overwrite + auto-compaction) — shared
-    * with IngestHub's tokenize-once path. `stats` is 1 row. */
-  private[graft] def writeDeltas(postings: DataFrame, stats: DataFrame,
-      batchId: Long, logDir: String): Unit = {
-    postings.write.mode("overwrite")
-      .parquet(s"$logDir/postings/b$batchId.parquet")
-    stats.coalesce(1) // 1 row
-      .write.mode("overwrite")
-      .parquet(s"$logDir/stats/b$batchId.parquet")
-    val spark = postings.sparkSession
-    DeltaLog.maybeCompact(spark, s"$logDir/postings")
-    DeltaLog.maybeCompact(spark, s"$logDir/stats")
-  }
-
-  /** Wire a streaming documents DataFrame (doc_id, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
 
   /** The live (doc_id, term, tf, dl) relation for a term set, from the
     * postings log alone: term filter (pushed into the scan), then the
@@ -114,14 +89,14 @@ object StreamIndex {
     * corpus exactly (each (doc, term) lives in one batch file). */
   private[graft] def tf(spark: SparkSession, logDir: String,
       terms: Seq[String]): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/postings", PostingsDdl)
+    Postings.read(spark, logDir)
       .filter(col("term").isInCollection(terms))
       .groupBy(col("doc_id"), col("term"))
       .agg(sum(col("tf")).as("tf"), max(col("dl")).as("dl"))
 
   /** The live (n_docs, sum_dl) corpus stats from the stats log alone. */
   private[graft] def stats(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/stats", StatsDdl)
+    Stats.read(spark, logDir)
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
 
   /** The two readouts over the folded index — identical machinery (and,

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.MlEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming logistic-regression maintainer — the incremental twin of
   * q_logistic_irls (graft.operators.MlEval): maintained CLASSIFIER
@@ -19,7 +18,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `cells_b<id>.parquet` path in overwrite
   * mode (the StreamDq discipline).
   */
-object StreamIrls {
+object StreamIrls extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -28,31 +27,20 @@ object StreamIrls {
   private[graft] val DeltaDdl =
     "l_quantity DOUBLE,l_discount DOUBLE,y DOUBLE,cnt BIGINT"
 
-  /** Append one micro-batch's feature-grid cell delta. */
-  def processBatch(liBatch: DataFrame, batchId: Long, logDir: String): Unit = {
-    if (liBatch.isEmpty) return
-    MlEval.irlsCells(liBatch)
-      .coalesce(1) // feature-grid-sized
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
-  }
+  private val Cells = DeltaLog.Log("log", "cells_", DeltaDdl)
 
-  /** Wire a streaming lineitem-shaped DataFrame
-    * (l_quantity, l_discount, l_returnflag) into the maintainer. */
-  def run(liStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    liStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's feature-grid cell delta. Batches carry
+    * (l_quantity, l_discount, l_returnflag). */
+  protected def append(liBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Cells.write(
+      MlEval.irlsCells(liBatch).coalesce(1), // feature-grid-sized
+      batchId, logDir)
 
   /** The live fit from the cell log alone: integer fold by cell, then the
     * shared two-round IRLS report. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
-    val cells = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val cells = Cells.read(spark, logDir)
       .groupBy(col("l_quantity"), col("l_discount"), col("y"))
       .agg(sum(col("cnt")).as("cnt"))
     MlEval.irlsReport(cells)

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming embedding-health maintainer — the incremental twin of
   * q_embed_isotropy (graft.operators.Similarity): a maintained
@@ -18,7 +17,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `*_b<id>.parquet` paths in overwrite mode
   * (the StreamDq discipline).
   */
-object StreamIso {
+object StreamIso extends Maintainer {
 
   /** Delta-log schemas as written by [[processBatch]] (norm moments and
     * per-dimension sums) — pinned against the writer by
@@ -29,38 +28,26 @@ object StreamIso {
     "n BIGINT,sn_d DECIMAL(38,9),sn2_d DECIMAL(38,9)"
   private[graft] val PosDdl = "pos INT,cnt BIGINT,sv_d DECIMAL(38,12)"
 
-  /** Append one micro-batch's norm-moment + per-dimension deltas. */
-  def processBatch(embBatch: DataFrame, batchId: Long, logDir: String): Unit = {
-    if (embBatch.isEmpty) return
-    Similarity.isoNormsDec(embBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/norms/b$batchId.parquet")
-    Similarity.isoPosDec(embBatch)
-      .coalesce(1) // d rows
-      .write.mode("overwrite")
-      .parquet(s"$logDir/pos/b$batchId.parquet")
-  }
+  private val Norms = DeltaLog.Log("norms", "", NormsDdl)
+  private val Pos = DeltaLog.Log("pos", "", PosDdl)
 
-  /** Wire a streaming embeddings DataFrame (vec_id, embedding) into the
-    * maintainer. */
-  def run(embStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    embStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's norm-moment + per-dimension deltas.
+    * Batches carry (vec_id, embedding). */
+  protected def append(embBatch: DataFrame, batchId: Long,
+      logDir: String): Unit = {
+    Norms.write(Similarity.isoNormsDec(embBatch).coalesce(1),
+      batchId, logDir)
+    Pos.write(Similarity.isoPosDec(embBatch).coalesce(1), // d rows
+      batchId, logDir)
+  }
 
   /** The live readout from the delta logs alone: exact decimal folds,
     * then the shared report. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
-    val norms = DeltaLog.emptyOr(spark, s"$logDir/norms", NormsDdl)
+    val norms = Norms.read(spark, logDir)
       .agg(sum(col("n")).as("n"),
         sum(col("sn_d")).as("sn_d"), sum(col("sn2_d")).as("sn2_d"))
-    val pos = DeltaLog.emptyOr(spark, s"$logDir/pos", PosDdl)
+    val pos = Pos.read(spark, logDir)
       .groupBy(col("pos"))
       .agg(sum(col("cnt")).as("cnt"), sum(col("sv_d")).as("sv_d"))
     Similarity.isoReport(norms, pos)

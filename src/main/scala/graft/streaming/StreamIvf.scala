@@ -53,9 +53,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * StreamDq discipline) — rows are disjoint, not duplicate-insensitive,
   * so replace-my-batch is correctness on checkpoint-recovery replay.
   *
-  * Both logs auto-compact past [[DeltaLog.CompactThreshold]] batch dirs
-  * ([[DeltaLog.maybeCompact]] at the end of processBatch — two logs per
-  * batch makes this the chattiest maintainer): disjoint rows re-filed,
+  * All three logs auto-compact past [[DeltaLog.CompactThreshold]] batch
+  * dirs ([[DeltaLog.maybeCompact]] after each write): disjoint rows re-filed,
   * readouts bit-equal across the boundary, keepLast protecting the only
   * replayable batch (AutoCompactSpec's StreamIvf leg).
   */
@@ -92,68 +91,57 @@ object StreamIvf {
       java.util.Arrays.asList(cents.collect(): _*), cents.schema)
   }
 
+  private val Assign = DeltaLog.Log("assign", "", AssignDdl)
+  private val Probes = DeltaLog.Log("probes", "", ProbesDdl)
+  private val Codes = DeltaLog.Log("codes", "", CodesDdl)
+
   /** Append one micro-batch's assignment + probe + PQ-code deltas,
     * scored against the frozen `cents` (coarse) and `pqCents` (fine)
     * codebooks. Batches carry (vec_id, embedding). */
   def processBatch(embBatch: DataFrame, batchId: Long, logDir: String,
-      cents: DataFrame, pqCents: DataFrame): Unit = {
-    if (embBatch.isEmpty) return
-    // persisted: the batch feeds the coarse scoring pass AND the PQ
-    // encode (two independent model joins over the same rows).
-    // REPARTITIONED first: a micro-batch often arrives as one file =
-    // one partition, which would run every decimal distance on a single
-    // core (measured: the 10x ann envelope read p95 11.4 s single-
-    // partition vs the 10 s budget; spread, the same batch scores in
-    // ~2 s) — the Tables.spread rationale applied to the stream path
-    val batch = embBatch.select(col("vec_id"), col("embedding"))
-      .repartition(embBatch.sparkSession.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // persisted: the batch×NCells scoring pass feeds BOTH coarse deltas
-    // (the same barrier the batch ivfCand uses)
-    val scored = Similarity.ivfScored(Similarity.withNormOf(batch), cents)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      Similarity.ivfAssignOf(scored)
-        .write.mode("overwrite")
-        .parquet(s"$logDir/assign/b$batchId.parquet")
-      Similarity.ivfProbesOf(scored, Similarity.IvfTuneTiers.max)
-        .write.mode("overwrite")
-        .parquet(s"$logDir/probes/b$batchId.parquet")
-      Similarity.pqCodesOf(Similarity.pqSubvOf(batch), pqCents)
-        .write.mode("overwrite")
-        .parquet(s"$logDir/codes/b$batchId.parquet")
-    } finally { scored.unpersist(); batch.unpersist() }
-    // three logs per batch — the chattiest maintainer; all rows-disjoint
-    // across batches, so compactLog's re-file argument holds verbatim
-    val spark = embBatch.sparkSession
-    DeltaLog.maybeCompact(spark, s"$logDir/assign")
-    DeltaLog.maybeCompact(spark, s"$logDir/probes")
-    DeltaLog.maybeCompact(spark, s"$logDir/codes")
-  }
+      cents: DataFrame, pqCents: DataFrame): Unit =
+    DeltaLog.ifNonEmpty(embBatch) {
+      // persisted: the batch feeds the coarse scoring pass AND the PQ
+      // encode (two independent model joins over the same rows).
+      // REPARTITIONED first: a micro-batch often arrives as one file =
+      // one partition, which would run every decimal distance on a single
+      // core (measured: the 10x ann envelope read p95 11.4 s single-
+      // partition vs the 10 s budget; spread, the same batch scores in
+      // ~2 s) — the Tables.spread rationale applied to the stream path
+      val batch = embBatch.select(col("vec_id"), col("embedding"))
+        .repartition(embBatch.sparkSession.sparkContext.defaultParallelism)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // persisted: the batch×NCells scoring pass feeds BOTH coarse deltas
+      // (the same barrier the batch ivfCand uses)
+      val scored = Similarity.ivfScored(Similarity.withNormOf(batch), cents)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        Assign.write(Similarity.ivfAssignOf(scored), batchId, logDir)
+        Probes.write(Similarity.ivfProbesOf(scored,
+          Similarity.IvfTuneTiers.max), batchId, logDir)
+        Codes.write(Similarity.pqCodesOf(Similarity.pqSubvOf(batch),
+          pqCents), batchId, logDir)
+      } finally { scored.unpersist(); batch.unpersist() }
+    }
 
   /** Wire a streaming embeddings DataFrame (vec_id, embedding) into the
     * maintainer against the frozen codebooks. */
   def run(embStream: DataFrame, logDir: String, cents: DataFrame,
-      pqCents: DataFrame,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
+      pqCents: DataFrame, trigger: Trigger = DeltaLog.DefaultTrigger)
       : StreamingQuery =
-    embStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir, cents, pqCents))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+    DeltaLog.run(embStream, logDir, trigger)(
+      processBatch(_, _, logDir, cents, pqCents))
 
   /** The folded assignment log — disjoint rows, so the fold is the read
     * itself (no aggregate). */
   private[graft] def assign(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/assign", AssignDdl)
+    Assign.read(spark, logDir)
 
   /** The folded probe log at probe depth `maxP` (prk filter — probe sets
     * nest, so one log serves every depth up to the materialized max). */
   private[graft] def probes(spark: SparkSession, logDir: String,
       maxP: Int): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/probes", ProbesDdl)
+    Probes.read(spark, logDir)
       .filter(col("prk") <= maxP)
 
   /** The folded corpus vectors (vec_id, embedding, nrm) — ground truth
@@ -193,7 +181,7 @@ object StreamIvf {
 
   /** The folded PQ-code log — disjoint rows, so the fold is the read. */
   private[graft] def codes(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/codes", CodesDdl)
+    Codes.read(spark, logDir)
 
   /** IVF-PQ top-k over the maintained index — q_ann_ivfpq bit-equal on
     * the corpus streamed so far: candidates from the folded coarse logs,

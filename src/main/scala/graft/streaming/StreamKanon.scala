@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Governance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming k-anonymity / l-diversity audit — the incremental twin of
   * q_k_anonymity (Governance.qKAnonymity), completing the governance
@@ -33,8 +32,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * its own file; the sketch half would absorb replays for free, but the
   * count would double).
   */
-object StreamKanon {
-
+object StreamKanon extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -43,33 +41,22 @@ object StreamKanon {
   private[graft] val DeltaDdl =
     "lang STRING,chars_bucket BIGINT,n BIGINT,sk BINARY"
 
-  /** Audit one micro-batch of documents rows: per-class count + source
-    * sketch appended to the class log. */
-  def processBatch(docsBatch: DataFrame, batchId: Long, logDir: String): Unit = {
-    val spark = docsBatch.sparkSession
-    if (docsBatch.isEmpty) return
-    Governance.kanonClasses(docsBatch)
+  private val Classes = DeltaLog.Log("log", "classes_", DeltaDdl)
+
+  /** Audit one micro-batch of documents rows (lang, n_chars, source):
+    * per-class count + source sketch appended to the class log. */
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Classes.write(Governance.kanonClasses(docsBatch)
       .groupBy(col("lang"), col("chars_bucket"))
       .agg(count(lit(1)).as("n"), hll_sketch_agg(col("source")).as("sk"))
-      .coalesce(1) // O(observed classes) rows
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/classes_b$batchId.parquet")
-  }
-
-  /** Wire a streaming documents DataFrame (lang, n_chars, source) into the
-    * audit maintainer. */
-  def run(docs: DataFrame, logDir: String,
-          trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    docs.writeStream
-      .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+      .coalesce(1), // O(observed classes) rows
+      batchId, logDir)
 
   /** The all-time audit from the class log alone: additive counts summed,
     * source sketches unioned, flags shared with the batch query. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
-    val folded = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val folded = Classes.read(spark, logDir)
       .groupBy(col("lang"), col("chars_bucket"))
       .agg(sum(col("n")).as("class_n"),
         hll_sketch_estimate(hll_union_agg(col("sk"))).as("l_diversity"))

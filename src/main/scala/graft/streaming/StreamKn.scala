@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.LexicalStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming Kneser–Ney model maintainer — the incremental twin of the
   * q_kn_doc_surprisal / q_kneser_ney LM family, and the first maintained
@@ -36,7 +35,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * [[Compaction.compactLog]] path as the signature indexes when file count
   * (not data volume) becomes the read bottleneck.
   */
-object StreamKn {
+object StreamKn extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -45,33 +44,19 @@ object StreamKn {
   private[graft] val DeltaDdl =
     "w1 STRING,w2 STRING,cb BIGINT"
 
+  private val Cells = DeltaLog.Log("log", "cells_", DeltaDdl)
+
   /** Append one micro-batch's train-split bigram-count delta to the log.
     * Batches of documents carry (doc_id, text); the salted-md5 split
     * inside [[LexicalStats.knDocBigrams]] decides train membership
     * per-document, identically to the batch query. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    LexicalStats.knTrainCounts(LexicalStats.knDocBigrams(docsBatch))
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
-  }
-
-  /** Wire a streaming documents DataFrame (doc_id, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Cells.write(LexicalStats.knTrainCounts(LexicalStats.knDocBigrams(docsBatch)), batchId, logDir)
 
   /** The live (w1, w2, cb) model from the delta log alone: one fold. */
   def model(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Cells.read(spark, logDir)
     log.groupBy(col("w1"), col("w2")).agg(sum(col("cb")).as("cb"))
   }
 

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.MlEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming mutual-information maintainer — the incremental twin of
   * q_mutual_info (graft.operators.MlEval): the (event_type, hour)
@@ -20,7 +19,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `cells_b<id>.parquet` path in overwrite mode
   * (the StreamDq discipline).
   */
-object StreamMi {
+object StreamMi extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -29,32 +28,20 @@ object StreamMi {
   private[graft] val DeltaDdl =
     "x STRING,y BIGINT,nij BIGINT"
 
-  /** Append one micro-batch's contingency-cell delta. */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    MlEval.miCells(eventsBatch)
-      .coalesce(1) // ≤ |types|·24 rows
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cells_b$batchId.parquet")
-  }
+  private val Cells = DeltaLog.Log("log", "cells_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_type, ts_us) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's contingency-cell delta. Batches carry
+    * (event_type, ts_us). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Cells.write(
+      MlEval.miCells(eventsBatch).coalesce(1), // ≤ |types|·24 rows
+      batchId, logDir)
 
   /** The live readout from the cell log alone: integer fold by cell, then
     * the shared MI report. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
-    val cells = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val cells = Cells.read(spark, logDir)
       .groupBy(col("x"), col("y"))
       .agg(sum(col("nij")).as("nij"))
     MlEval.miReport(cells)

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.LexicalStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming mixture-rebalance maintainer — the growing-corpus twin of
   * q_mix_rebalance: the DoReMi-shaped "which sources deserve more
@@ -19,9 +18,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Idempotent recovery: fixed `b<id>.parquet` paths in overwrite mode
   * (additive counters are not duplicate-insensitive — the StreamDq
-  * discipline); log compaction rides [[Compaction.compactLog]].
+  * discipline); the log auto-compacts past
+  * [[DeltaLog.CompactThreshold]] batch dirs.
   */
-object StreamMix {
+object StreamMix extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -29,39 +29,20 @@ object StreamMix {
   private[graft] val DeltaDdl =
     "source STRING,term STRING,ctf BIGINT,vtf BIGINT"
 
+  private[graft] val Counts = DeltaLog.Log("log", "", DeltaDdl)
+
   /** Append one micro-batch's split-count delta. Batches carry
     * (doc_id, text, source). */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    writeDelta(LexicalStats.mixSt(docsBatch), batchId, logDir)
-  }
-
-  /** Delta writer (fixed-path overwrite) — shared with IngestHub's
-    * tokenize-once path. */
-  private[graft] def writeDelta(delta: DataFrame, batchId: Long,
+  protected def append(docsBatch: DataFrame, batchId: Long,
       logDir: String): Unit =
-    delta.write.mode("overwrite")
-      .parquet(s"$logDir/log/b$batchId.parquet")
-
-  /** Wire a streaming documents DataFrame (doc_id, text, source) into
-    * the maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+    Counts.write(LexicalStats.mixSt(docsBatch), batchId, logDir)
 
   /** The live rebalance table — q_mix_rebalance bit-equal on the corpus
     * streamed so far: fold the log by per-(source, term) sums, then the
     * shared report. */
   def report(spark: SparkSession, logDir: String): DataFrame =
     LexicalStats.mixReport(
-      DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+      Counts.read(spark, logDir)
         .groupBy(col("source"), col("term"))
         .agg(sum(col("ctf")).as("ctf"), sum(col("vtf")).as("vtf")))
 }

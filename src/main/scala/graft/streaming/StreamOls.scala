@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.MlEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming OLS maintainer — the incremental twin of q_ols_fit
   * (graft.operators.MlEval): a maintained REGRESSION, not just maintained
@@ -20,7 +19,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * mode (the StreamDq discipline) — a replayed batch overwrites its own
   * delta instead of double-counting.
   */
-object StreamOls {
+object StreamOls extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -32,32 +31,19 @@ object StreamOls {
       ",sdd_d DECIMAL(38,9),sqy_d DECIMAL(38,9),sdy_d DECIMAL(38,9)" +
       ",syy_d DECIMAL(38,9)"
 
-  /** Append one micro-batch's moment delta (1 row: n + ten decimal sums). */
-  def processBatch(liBatch: DataFrame, batchId: Long, logDir: String): Unit = {
-    if (liBatch.isEmpty) return
-    MlEval.olsMomentsDec(liBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/moments_b$batchId.parquet")
-  }
+  private val Moments = DeltaLog.Log("log", "moments_", DeltaDdl)
 
-  /** Wire a streaming lineitem-shaped DataFrame
-    * (l_quantity, l_discount, l_extendedprice) into the maintainer. */
-  def run(liStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    liStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's moment delta (1 row: n + ten decimal
+    * sums). Batches carry (l_quantity, l_discount, l_extendedprice). */
+  protected def append(liBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Moments.write(MlEval.olsMomentsDec(liBatch).coalesce(1), batchId, logDir)
 
   /** The live fit from the moment log alone: exact decimal fold, one
     * terminal round per moment, then the shared closed-form solve. */
   def report(spark: SparkSession, logDir: String): DataFrame = {
     val dec = Seq("sq", "sd", "sy", "sqq", "sqd", "sdd", "sqy", "sdy", "syy")
-    val folded = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val folded = Moments.read(spark, logDir)
       .agg(sum(col("n")).as("n"),
         dec.map(c => sum(col(c + "_d")).as(c + "_d")): _*)
     MlEval.olsSolve(MlEval.olsFinish(folded))

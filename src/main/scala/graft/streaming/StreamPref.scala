@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.{PipelineOps, TextAnalytics}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming preference-pair maintainer — the growing-corpus twin of
   * q_preference_pairs: one delta log of per-batch stratum extrema whose
@@ -26,9 +25,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Idempotent recovery: fixed `b<id>.parquet` paths in overwrite mode
   * (additive counters are not duplicate-insensitive — the StreamDq
-  * discipline); log compaction rides [[Compaction.compactLog]].
+  * discipline); the log auto-compacts past
+  * [[DeltaLog.CompactThreshold]] batch dirs.
   */
-object StreamPref {
+object StreamPref extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -37,34 +37,16 @@ object StreamPref {
     "ch STRUCT<doc_id: BIGINT, q: DOUBLE>," +
     "rj STRUCT<doc_id: BIGINT, q: DOUBLE>"
 
+  private[graft] val Extrema = DeltaLog.Log("log", "", DeltaDdl)
+
   /** Append one micro-batch's per-stratum extrema delta. Batches carry
     * (doc_id, text, lang, source). */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    writeDelta(PipelineOps.prefGrouped(docsBatch
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Extrema.write(PipelineOps.prefGrouped(docsBatch
         .select(col("lang"), col("source"), col("doc_id"),
           TextAnalytics.qualityCol.as("q"))),
       batchId, logDir)
-  }
-
-  /** Delta writer (fixed-path overwrite) — shared with IngestHub. */
-  private[graft] def writeDelta(delta: DataFrame, batchId: Long,
-      logDir: String): Unit =
-    delta.write.mode("overwrite")
-      .parquet(s"$logDir/log/b$batchId.parquet")
-
-  /** Wire a streaming documents DataFrame (doc_id, text, lang, source)
-    * into the maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
 
   /** The live pair table — q_preference_pairs bit-equal on the corpus
     * streamed so far: fold the extrema log (sum counts; re-pick extrema
@@ -72,7 +54,7 @@ object StreamPref {
     * shared readout tail. */
   def pairs(spark: SparkSession, logDir: String): DataFrame =
     PipelineOps.prefPairsFrom(
-      DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+      Extrema.read(spark, logDir)
         .groupBy(col("lang"), col("source"))
         .agg(sum(col("n_docs")).as("n_docs"),
           max_by(col("ch"), struct(col("ch.q"), -col("ch.doc_id")))

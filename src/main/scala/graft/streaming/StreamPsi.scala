@@ -57,32 +57,27 @@ object StreamPsi {
     * deployment; only the not-yet-started delta log degrades). */
   private[graft] val DeltaDdl = "bin BIGINT,n BIGINT"
 
+  private val Bins = DeltaLog.Log("log", "bins_", DeltaDdl)
+
   /** Bin one micro-batch of (value) rows against the frozen reference
     * bounds; append its ≤PsiBins count rows to the log. */
   def processBatch(batch: DataFrame, refDir: String, batchId: Long,
-      logDir: String): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    val refBounds = spark.read.parquet(refDir)
-      .select(col("vlo"), col("width")).limit(1)
-    batch.crossJoin(broadcast(refBounds))
-      .withColumn("bin", Governance.psiBinCol(col("value"), col("vlo"), col("width")))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"))
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/bins_b$batchId.parquet")
-  }
+      logDir: String): Unit =
+    DeltaLog.ifNonEmpty(batch) {
+      val refBounds = batch.sparkSession.read.parquet(refDir)
+        .select(col("vlo"), col("width")).limit(1)
+      Bins.write(batch.crossJoin(broadcast(refBounds))
+        .withColumn("bin",
+          Governance.psiBinCol(col("value"), col("vlo"), col("width")))
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("n"))
+        .coalesce(1), batchId, logDir)
+    }
 
   /** Wire a streaming (value) DataFrame into the monitor. */
   def run(values: DataFrame, refDir: String, logDir: String,
-          trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    values.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, refDir, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+      trigger: Trigger = DeltaLog.DefaultTrigger): StreamingQuery =
+    DeltaLog.run(values, logDir, trigger)(processBatch(_, refDir, _, logDir))
 
   /** PSI of the accumulated stream vs the frozen reference, from the bin
     * log alone: fold the log by bin, join reference counts, shared
@@ -91,7 +86,7 @@ object StreamPsi {
   def report(spark: SparkSession, refDir: String, logDir: String): DataFrame = {
     val ref = spark.read.parquet(refDir)
       .select(col("bin"), col("n_ref").as("n_old"))
-    val cur = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val cur = Bins.read(spark, logDir)
       .groupBy(col("bin")).agg(sum(col("n")).as("n_new"))
     Governance.psiOfCounts(ref.join(cur, Seq("bin"), "full"))
   }

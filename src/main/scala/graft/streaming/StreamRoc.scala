@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.MlEval
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming ROC/AUC maintainer — the incremental twin of q_roc_auc
   * (graft.operators.MlEval): a maintained CLASSIFIER readout. The
@@ -20,7 +19,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `vc_b<id>.parquet` path in overwrite mode
   * (the StreamDq discipline).
   */
-object StreamRoc {
+object StreamRoc extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -29,30 +28,18 @@ object StreamRoc {
   private[graft] val DeltaDdl =
     "v DOUBLE,p BIGINT,f BIGINT"
 
-  /** Append one micro-batch's value-domain count delta. */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    MlEval.rocValueCounts(eventsBatch)
-      .coalesce(1) // value-domain-sized
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/vc_b$batchId.parquet")
-  }
+  private val Counts = DeltaLog.Log("log", "vc_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_type, value) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's value-domain count delta. Batches carry
+    * (event_type, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Counts.write(
+      MlEval.rocValueCounts(eventsBatch).coalesce(1), // value-domain-sized
+      batchId, logDir)
 
   private def folded(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    Counts.read(spark, logDir)
       .groupBy(col("v"))
       .agg(sum(col("p")).as("p"), sum(col("f")).as("f"))
 

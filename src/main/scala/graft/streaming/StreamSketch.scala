@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.operators.Governance
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Incremental HLL sketch maintenance — the streaming twin of
   * q_hll_sketch_merge (Governance.qHllSketchMerge).
@@ -44,38 +43,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the log grows by O(active days × types) rows per batch; rollup reads
   * ONLY the log, never raw history.
   */
-object StreamSketch {
-
-  /** Delete this batch's sketch file from an earlier attempt (recovery
-    * replay), through the Hadoop FS API like MicroBatchPipeline's sweep. */
+object StreamSketch extends Maintainer {
 
   /** One micro-batch of events (event_type, ts_us, user_id) → day-sketch
     * rows appended to the log at `sketchDir/log` (the checkpoint lives
     * beside, not inside, the log). */
-  def processBatch(batch: DataFrame, batchId: Long, sketchDir: String): Unit = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return
-    Governance.dailySketches(batch)
-      .coalesce(1) // O(types × days) rows — one file per batch
-      .write.mode("overwrite")
-      .parquet(s"$sketchDir/log/sketch_b$batchId.parquet")
-  }
-
-  /** Wire a streaming events DataFrame (event_type, ts_us, user_id) into
-    * the incremental sketch maintainer. Checkpoint kept, like every graft
-    * stream. */
-  def run(events: DataFrame, sketchDir: String,
-          trigger: Trigger = Trigger.ProcessingTime("10 seconds")): StreamingQuery =
-    events.writeStream
-      .foreachBatch((df: DataFrame, id: Long) => processBatch(df, id, sketchDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$sketchDir/checkpoint")
-      .start()
+  protected def append(batch: DataFrame, batchId: Long,
+      sketchDir: String): Unit =
+    Sketches.write(
+      Governance.dailySketches(batch)
+        .coalesce(1), // O(types × days) rows — one file per batch
+      batchId, sketchDir)
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
     * empty relation in this schema when the maintainer is fresh. */
   private[graft] val DeltaDdl = "event_type STRING,day BIGINT,sk BINARY"
+
+  private val Sketches = DeltaLog.Log("log", "sketch_", DeltaDdl)
 
   /** Distinct-user estimate per event_type from the sketch log alone —
     * never re-touching raw rows. The query side of the incremental
@@ -83,6 +68,5 @@ object StreamSketch {
     * batch's sketches are a nested `sketch_b<id>.parquet` directory under
     * the log root.) */
   def rollup(spark: SparkSession, sketchDir: String): DataFrame =
-    Governance.sketchRollup(
-      DeltaLog.emptyOr(spark, s"$sketchDir/log", DeltaDdl))
+    Governance.sketchRollup(Sketches.read(spark, sketchDir))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Governance
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming t-closeness monitor — the incremental twin of q_t_closeness
   * (Governance.qTCloseness), completing the governance family's twin
@@ -25,7 +24,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * counters are not duplicate-insensitive, so replace-my-batch is
   * CORRECTNESS on checkpoint-recovery replay, not hygiene.
   */
-object StreamTclose {
+object StreamTclose extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -34,33 +33,20 @@ object StreamTclose {
   private[graft] val DeltaDdl =
     "lang STRING,chars_bucket BIGINT,source STRING,cnt BIGINT"
 
-  /** Append one micro-batch's class-value count deltas to the log. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    Governance.tcloseClassCounts(docsBatch)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/cv_b$batchId.parquet")
-  }
+  private val Counts = DeltaLog.Log("log", "cv_", DeltaDdl)
 
-  /** Wire a streaming documents DataFrame (lang, n_chars, source) into
-    * the monitor. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's class-value count deltas to the log.
+    * Batches carry (lang, n_chars, source). */
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Counts.write(Governance.tcloseClassCounts(docsBatch), batchId, logDir)
 
   /** The all-time t-closeness report from the count log alone: fold the
     * additive deltas per (class, value), then the shared batch scoring.
     * The folded relation is persisted for the scorer's four consumers
     * (the same reason the batch query persists its counts). */
   def report(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Counts.read(spark, logDir)
     Governance.tcloseReport(
       log.groupBy(col("lang"), col("chars_bucket"), col("source"))
         .agg(sum(col("cnt")).as("cnt"))

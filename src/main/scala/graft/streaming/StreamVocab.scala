@@ -4,7 +4,6 @@ import graft.functions.Text
 import graft.operators.LexicalStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming vocabulary maintainer — ONE maintained (term, cnt) delta log
   * serving the whole corpus-frequency-spectrum family bit-equal to its
@@ -31,7 +30,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * (vocabulary-sized output); readout cost is the fold (vocabulary-scale,
   * NOT corpus-scale) plus the readouts' own model-scale plans. The log
   * compacts AUTOMATICALLY past [[DeltaLog.CompactThreshold]] batch dirs
-  * ([[DeltaLog.maybeCompact]] at the end of every processBatch), so
+  * ([[DeltaLog.maybeCompact]] after every batch write), so
   * readout file count is bounded regardless of stream lifetime
   * (AutoCompactSpec drives past the threshold and pins bit-equality
   * across the boundary).
@@ -41,50 +40,29 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * is correctness on checkpoint-recovery replay (the StreamDq
   * discipline).
   */
-object StreamVocab {
+object StreamVocab extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
     * empty relation in this schema when the maintainer is fresh. */
   private[graft] val DeltaDdl = "term STRING,cnt BIGINT"
 
+  private[graft] val Terms = DeltaLog.Log("log", "", DeltaDdl)
+
   /** Append one micro-batch's per-term count delta. Batches carry
     * (doc_id, text); tokenization (lowercase, whitespace split, full
     * tokens) is identical to the batch family's. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    writeDelta(docsBatch
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Terms.write(docsBatch
       .select(explode(Text.tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt")),
       batchId, logDir)
-  }
-
-  /** Delta writer (fixed-path overwrite + auto-compaction) — shared with
-    * IngestHub's tokenize-once path, which derives the identical delta
-    * from the hub's one shared token relation. */
-  private[graft] def writeDelta(delta: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    delta.write.mode("overwrite").parquet(s"$logDir/log/b$batchId.parquet")
-    DeltaLog.maybeCompact(delta.sparkSession, s"$logDir/log")
-  }
-
-  /** Wire a streaming documents DataFrame (doc_id, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
 
   /** The live (term, cf) relation from the log alone: the additive fold —
     * equals the batch [[LexicalStats.cfOf]] over the same corpus exactly. */
   private def cf(spark: SparkSession, logDir: String): DataFrame =
-    DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    Terms.read(spark, logDir)
       .groupBy(col("term")).agg(sum(col("cnt")).as("cf"))
 
   /** Readout 1: the Zipf log-log fit — q_zipf_fit bit-equal on the corpus

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.BehaviorAnalytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming A/B maintainer — the incremental twin of q_ab_welch AND
   * q_ab_power (graft.operators.BehaviorAnalytics): ONE maintained relation
@@ -18,7 +17,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `arms_b<id>.parquet` path in overwrite mode
   * (the StreamDq discipline).
   */
-object StreamWelch {
+object StreamWelch extends Maintainer {
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -28,31 +27,17 @@ object StreamWelch {
     "event_type STRING,n BIGINT,sx_d DECIMAL(38,9)" +
       ",sxx_d DECIMAL(38,9)"
 
-  /** Append one micro-batch's per-arm moment delta (≤2 rows). */
-  def processBatch(eventsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (eventsBatch.isEmpty) return
-    BehaviorAnalytics.armMomentsDec(eventsBatch)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/arms_b$batchId.parquet")
-  }
+  private val Arms = DeltaLog.Log("log", "arms_", DeltaDdl)
 
-  /** Wire a streaming events DataFrame (event_type, value) into the
-    * maintainer. */
-  def run(eventStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    eventStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  /** Append one micro-batch's per-arm moment delta (≤2 rows). Batches
+    * carry (event_type, value). */
+  protected def append(eventsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Arms.write(BehaviorAnalytics.armMomentsDec(eventsBatch).coalesce(1), batchId, logDir)
 
   private def folded(spark: SparkSession, logDir: String): DataFrame =
     BehaviorAnalytics.armFinish(
-      DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+      Arms.read(spark, logDir)
         .groupBy(col("event_type"))
         .agg(sum(col("n")).as("n"),
           sum(col("sx_d")).as("sx_d"), sum(col("sxx_d")).as("sxx_d")))

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.LexicalStats
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Streaming lexical-LM count maintainer — ONE maintained (lang, term)
   * split-count log serving TWO generalization readouts bit-equal to their
@@ -26,33 +25,17 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Idempotent recovery: fixed `tf_b<id>.parquet` path in overwrite mode —
   * additive counters are not duplicate-insensitive, so replace-my-batch
   * is correctness on checkpoint-recovery replay (the StreamKn/StreamDq
-  * discipline). Log compaction rides [[Compaction.compactLog]] when file
-  * count becomes the read bottleneck.
+  * discipline). The log auto-compacts past [[DeltaLog.CompactThreshold]]
+  * batch dirs.
   */
-object StreamXent {
+object StreamXent extends Maintainer {
 
   /** Append one micro-batch's (lang, term) split-count delta. Batches
     * carry (doc_id, lang, text); split membership is decided per-document
     * inside the shared relation, identically to the batch queries. */
-  def processBatch(docsBatch: DataFrame, batchId: Long,
-      logDir: String): Unit = {
-    if (docsBatch.isEmpty) return
-    LexicalStats.xentTf(docsBatch)
-      .write.mode("overwrite")
-      .parquet(s"$logDir/log/tf_b$batchId.parquet")
-  }
-
-  /** Wire a streaming documents DataFrame (doc_id, lang, text) into the
-    * maintainer. */
-  def run(docStream: DataFrame, logDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds"))
-      : StreamingQuery =
-    docStream.writeStream
-      .foreachBatch((df: DataFrame, id: Long) =>
-        processBatch(df, id, logDir))
-      .trigger(trigger)
-      .option("checkpointLocation", s"$logDir/checkpoint")
-      .start()
+  protected def append(docsBatch: DataFrame, batchId: Long,
+      logDir: String): Unit =
+    Tf.write(LexicalStats.xentTf(docsBatch), batchId, logDir)
 
   /** Delta-log schema as written by [[processBatch]] — pinned against
     * the writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the
@@ -60,6 +43,8 @@ object StreamXent {
   private[graft] val DeltaDdl =
     "lang STRING,term STRING,ctf1 BIGINT,ctf2 BIGINT" +
       ",ctf4 BIGINT,ctf8 BIGINT,vtf BIGINT"
+
+  private val Tf = DeltaLog.Log("log", "tf_", DeltaDdl)
 
   /** The live (lang, term) split counts from the delta log alone: one
     * integer fold — equals the batch xentTf relation exactly. A freshly
@@ -69,7 +54,7 @@ object StreamXent {
     * parquet read throw, so the readouts degrade to empty reports, not
     * AnalysisException. */
   def tf(spark: SparkSession, logDir: String): DataFrame = {
-    val log = DeltaLog.emptyOr(spark, s"$logDir/log", DeltaDdl)
+    val log = Tf.read(spark, logDir)
     log.groupBy(col("lang"), col("term"))
       .agg(sum(col("ctf1")).as("ctf1"), sum(col("ctf2")).as("ctf2"),
         sum(col("ctf4")).as("ctf4"), sum(col("ctf8")).as("ctf8"),

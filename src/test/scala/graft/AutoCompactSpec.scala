@@ -4,11 +4,11 @@ import graft.operators.{Dedup, LexicalStats, Retrieval}
 import graft.streaming.{DeltaLog, StreamExactDedup, StreamIndex, StreamVocab}
 import java.nio.file.Files
 
-/** Auto-compaction policy end-to-end (round-15 verdict item #5):
-  * the three chattiest maintainers now call [[DeltaLog.maybeCompact]] at
-  * the end of every processBatch, so a stream that outlives
-  * [[DeltaLog.CompactThreshold]] micro-batches folds its old batch
-  * directories automatically. The contract under test, per maintainer:
+/** Auto-compaction policy end-to-end: every delta log compacts through
+  * [[DeltaLog.maybeCompact]] after each batch write, so a stream that
+  * outlives [[DeltaLog.CompactThreshold]] micro-batches folds its old
+  * batch directories automatically. The contract under test, per
+  * maintainer (and for all eight logs IngestHub writes):
   *
   *  1. drive MORE batches than the threshold (disjoint doc slices);
   *  2. the log physically compacted (dir count collapsed to
@@ -164,5 +164,46 @@ class AutoCompactSpec extends SparkSpec {
       docs.filter($"doc_id" % NBatches === (NBatches - 1)),
       (NBatches - 1).toLong, logDir)
     assert(rows(StreamBt.strengths(spark, logDir)) === batch)
+  }
+
+  test("IngestHub: auto-compacts all eight hub logs past the threshold; six readouts bit-equal + recovery") {
+    import graft.operators.{CorpusQuality, PipelineOps}
+    import graft.streaming.{IngestHub, StreamAblate, StreamMix, StreamPref}
+    val docs = Tables.documents(spark, dir)
+      .select($"doc_id", $"text", $"lang", $"source")
+    val base = Files.createTempDirectory("graft-ac-hub").toString
+    def slice(s: Int) = docs.filter($"doc_id" % NBatches === s)
+    for (s <- 0 until NBatches)
+      IngestHub.processBatch(slice(s), s.toLong, base)
+    for (log <- Seq("vocab/log", "exactdedup/log", "index/postings",
+        "index/stats", "ablate/counts", "ablate/docs", "mix/log",
+        "pref/log")) {
+      val nDirs = batchDirCount(s"$base/$log")
+      assert(nDirs < NBatches - 2, s"$log never compacted: $nDirs dirs")
+      assert(new java.io.File(s"$base/$log").listFiles()
+        .exists(f => f.isDirectory && f.getName.startsWith("compacted-")),
+        s"$log holds no compacted dir")
+    }
+    // the IngestHubSpec pairs: each readout against its batch twin
+    val pairs = Seq(
+      (() => StreamVocab.zipf(spark, s"$base/vocab"),
+        rows(LexicalStats.qZipfFit.run(spark, dir))),
+      (() => StreamExactDedup.registry(spark, s"$base/exactdedup"),
+        rows(Dedup.qDedupExact.run(spark, dir))),
+      (() => StreamIndex.bm25(spark, s"$base/index"),
+        rows(Retrieval.qBm25Scores.run(spark, dir))),
+      (() => StreamAblate.report(spark, s"$base/ablate"),
+        rows(CorpusQuality.qFilterAblation.run(spark, dir))),
+      (() => StreamMix.report(spark, s"$base/mix"),
+        rows(LexicalStats.qMixRebalance.run(spark, dir))),
+      (() => StreamPref.pairs(spark, s"$base/pref"),
+        rows(PipelineOps.qPreferencePairs.run(spark, dir))))
+    for ((readout, batch) <- pairs) {
+      assert(batch.nonEmpty)
+      assert(rows(readout()) === batch)
+    }
+    // recovery replay of the LAST batch
+    IngestHub.processBatch(slice(NBatches - 1), (NBatches - 1).toLong, base)
+    for ((readout, batch) <- pairs) assert(rows(readout()) === batch)
   }
 }
