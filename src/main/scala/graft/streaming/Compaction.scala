@@ -3,53 +3,14 @@ package graft.streaming
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Small-file compaction for append-heavy parquet directories.
-  *
-  * A streaming pipeline writing one file per micro-batch (the reference's
-  * shape, and `MicroBatchPipeline`'s metric sinks) accumulates thousands of
-  * tiny files; at scale the NameNode/listing pressure and per-file open
-  * cost dominate reads long before data volume does. Compaction rewrites
-  * the directory into ~`targetBytes` files: read once, `repartition` to the
-  * computed file count, write to a sibling temp dir, then swap.
-  *
-  * The swap is delete-then-rename — atomic per rename on HDFS-like
-  * filesystems but with a visible gap; production table formats close that
-  * gap with a manifest/snapshot layer (Delta/Iceberg), which is out of
-  * scope here by design. Callers pause readers across `compact` (the
-  * streaming pipeline runs it between batches, where no reader races).
+/** Compaction of the delta logs ([[DeltaLog]]): folds a log's old
+  * per-batch directories into one, so a long-running stream's readouts
+  * open a bounded number of files. `DeltaLog.maybeCompact` runs it after
+  * each write past the shared threshold. The flat metric directories of
+  * `MicroBatchPipeline` are not compacted: [[Retention]] owns their
+  * lifetime.
   */
 object Compaction {
-
-  /** @return (filesBefore, filesAfter) — unchanged when already compact. */
-  def compact(spark: SparkSession, dir: String,
-      targetBytes: Long = 128L << 20): (Int, Int) = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return (0, 0)
-    val dataFiles = fs.listStatus(path)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    val totalBytes = dataFiles.map(_.getLen).sum
-    val targetFiles = math.max(1, math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    if (dataFiles.length <= targetFiles) return (dataFiles.length, dataFiles.length)
-
-    val tmp = new Path(dir + ".compacting")
-    fs.delete(tmp, true)
-    spark.read.parquet(dir)
-      .repartition(targetFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    // the Hadoop FS API reports these failures by RETURNING false, not by
-    // throwing — swallowing them here would strand the data in tmp while
-    // the reader-visible path 404s (silent data loss); fail loudly instead
-    if (!fs.delete(path, true))
-      throw new java.io.IOException(
-        s"compaction: failed to remove $path (rewrite preserved at $tmp)")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(
-        s"compaction: failed to publish $tmp as $path (data intact at $tmp)")
-    val after = fs.listStatus(path)
-      .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-    (dataFiles.length, after)
-  }
 
   /** Batch id of a log dir entry: the LAST digit run in the name, so both
     * `b<id>.parquet` batch dirs and `compacted-<N>.parquet` rewrites sort
@@ -93,12 +54,9 @@ object Compaction {
           s"compactLog recovery: failed to remove absorbed $d")
   }
 
-  /** Compaction for the Stream* maintainers' per-batch DELTA-LOG layout
-    * (nested `<name>_b<id>.parquet` batch DIRECTORIES under the log
-    * root — [[compact]] sees no top-level data files there and silently
-    * no-ops, which is exactly the wrong failure mode for the layout the
-    * maintainers actually write; found in round 15 while wiring
-    * StreamIndex).
+  /** Compaction for the delta-log layout (nested `<stem>b<id>.parquet`
+    * batch DIRECTORIES under the log root). Top-level files, such as a
+    * batch-built index seeded into a screen's log, are left alone.
     *
     * Folds every batch directory EXCEPT the `keepLast` newest into one
     * `compacted-<N>.parquet` directory, N = the max absorbed batch id
@@ -111,7 +69,8 @@ object Compaction {
     * never be rewritten in place and are safe to absorb. An existing
     * rewrite from a previous pass is re-absorbed (it sorts by its own N,
     * older than every surviving batch dir). Run between batches / with
-    * readers paused, like [[compact]].
+    * readers paused: the publish is a rename plus deletes, with no
+    * manifest layer (Delta/Iceberg territory, out of scope by design).
     *
     * Crash-safe (round-16 advice): the rewrite is PUBLISHED (renamed into
     * the log under its versioned name) BEFORE any absorbed dir is
@@ -150,9 +109,9 @@ object Compaction {
     if (!fs.rename(tmp, dest))
       throw new java.io.IOException(
         s"compactLog: failed to publish $tmp as $dest (data intact at $tmp)")
-    // fail loudly on FS-API false returns, like compact(): but note the
-    // rewrite IS published — a failure here double-counts until the next
-    // entry's recovery, it does not lose data
+    // the Hadoop FS API reports failures by RETURNING false: fail loudly,
+    // but note the rewrite IS published — a failure here double-counts
+    // until the next entry's recovery, it does not lose data
     for (d <- olds)
       if (!fs.delete(d, true))
         throw new java.io.IOException(

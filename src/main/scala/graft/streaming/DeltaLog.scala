@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 /** The one delta-log path of the Stream* maintainers.
   *
@@ -44,6 +46,16 @@ private[graft] object DeltaLog {
     /** The whole log as one relation, ready to fold. */
     def read(spark: SparkSession, logDir: String): DataFrame =
       emptyOr(spark, s"$logDir/$sub", ddl)
+
+    /** The log without batch `batchId`'s own delta: what that batch saw
+      * when it first ran, so a replay of it recomputes the same result. */
+    def readExcept(spark: SparkSession, logDir: String,
+        batchId: Long): DataFrame = {
+      val all = read(spark, logDir)
+      val own = s"/${stem}b$batchId.parquet/"
+      if (!all.inputFiles.exists(_.contains(own))) all
+      else all.where(!col("_metadata.file_path").contains(own))
+    }
   }
 
   /** The reference's trigger interval, every maintainer's default. */
@@ -131,4 +143,47 @@ trait Maintainer {
   def run(stream: DataFrame, logDir: String,
       trigger: Trigger = DeltaLog.DefaultTrigger): StreamingQuery =
     DeltaLog.run(stream, logDir, trigger)(processBatch(_, _, logDir))
+}
+
+/** An ingest screen: a [[Maintainer]] that probes each batch against an
+  * index of everything kept so far and keeps the batch's survivors. Both
+  * outputs are delta logs. The probe reads the index without the batch's
+  * own delta ([[DeltaLog.Log.readExcept]]), so a replay of the batch
+  * recomputes the same survivors and its two fixed-path writes replace
+  * the first attempt's files: exactly-once, in survivors and index alike.
+  * Survivors land before their index rows. */
+trait Screen extends Maintainer {
+
+  /** The kept rows, in the input columns this log's DDL names. */
+  private[graft] val Survivors: DeltaLog.Log
+
+  /** The index the probe reads: this screen's deltas plus any batch-built
+    * flat files at the top of the log directory. */
+  private[graft] val Index: DeltaLog.Log
+
+  /** Survivors of `batch` against `index`, and any relation the screen
+    * persisted on the way, released once both writes have read it. */
+  protected def screen(batch: DataFrame,
+      index: DataFrame): (DataFrame, Seq[DataFrame])
+
+  /** The index rows of the kept rows. */
+  protected def indexRows(kept: DataFrame): DataFrame
+
+  protected def append(batch: DataFrame, batchId: Long,
+      logDir: String): Unit = {
+    val (survivors, cached) = screen(batch,
+      Index.readExcept(batch.sparkSession, logDir, batchId))
+    // both writes read the survivors: persist so the probe runs once
+    val kept = survivors.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      Survivors.write(kept.select(
+        StructType.fromDDL(Survivors.ddl).fieldNames.map(col): _*),
+        batchId, logDir)
+      Index.write(indexRows(kept), batchId, logDir)
+    } finally (kept +: cached).foreach(_.unpersist())
+  }
+
+  /** Everything the screen has kept so far. */
+  def survivors(spark: SparkSession, logDir: String): DataFrame =
+    Survivors.read(spark, logDir)
 }

@@ -15,8 +15,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * The listener fires on the driver's listener-bus thread, off the
   * micro-batch critical path — a slow metrics write delays metrics, not
   * the stream. Appends go through the same single-file-per-event parquet
-  * shape as the data metric sinks; pair with [[Compaction]]/[[Retention]]
-  * for long-running queries. Scope with `attach`/`detach` (listeners are
+  * shape as the data metric sinks; pair with [[Retention]] for
+  * long-running queries. Scope with `attach`/`detach` (listeners are
   * session-global).
   */
 class ProgressLog(spark: SparkSession, dir: String)

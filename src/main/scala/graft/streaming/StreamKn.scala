@@ -31,9 +31,8 @@ import org.apache.spark.sql.functions._
   * batch-bigram-type rows before anything is written; the fold and the
   * derived model relations are bigram-type-scale; only a scoring pass
   * over the PROBE documents is corpus-priced, exactly like the batch
-  * scorer. Compaction of the delta log rides the same
-  * [[Compaction.compactLog]] path as the signature indexes when file count
-  * (not data volume) becomes the read bottleneck.
+  * scorer. The delta log compacts through the shared
+  * [[DeltaLog.maybeCompact]] policy, like every other delta log.
   */
 object StreamKn extends Maintainer {
 

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.multimodal.Media
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming perceptual-hash screen for MEDIA ingest — the multimodal
   * member of the durable-index screen family (StreamSimhash screens text by
@@ -22,19 +21,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * come only from shared (kind, band, bkey) buckets — per-batch cost is
   * candidates, never batch × index.
   *
-  * Ordering/replay contract is StreamSimhash's: survivors land in `outDir`
-  * BEFORE their signatures land in `indexDir` (at-least-once output, never
-  * silent drops); self-matches are excluded by media_id so a replayed
-  * object cannot suppress itself. `compactEvery` bounds index file-count
-  * growth the same way.
+  * Replay contract is StreamSimhash's ([[Screen]], exactly-once):
+  * survivors `(media_id, kind, text)` and their signatures are batch
+  * deltas under `<logDir>/survivors` and `<logDir>/index`; self-matches
+  * are excluded by media_id.
   */
-object StreamPhash {
+object StreamPhash extends Screen {
 
-  /** Signature-index schema (the flat append dir screenBatch probes) —
-    * [[DeltaLog.emptyOr]] serves the empty index on the first batch,
-    * replacing the per-module fs.exists dance. */
+  /** Delta-log schemas as [[append]] writes them (FreshMaintainerSpec). */
   private[graft] val IndexDdl =
     "old_id BIGINT,kind STRING,old_sig BIGINT"
+  private[graft] val SurvivorsDdl = "media_id BIGINT,kind STRING,text STRING"
+
+  private[graft] val Index = DeltaLog.Log("index", "", IndexDdl)
+  private[graft] val Survivors = DeltaLog.Log("survivors", "", SurvivorsDdl)
 
   /** 4 rows per object carrying (band, bkey) — the batch query's banding:
     * bkey = 4 bits of `sigCol`, bucket scoped by `kind`. */
@@ -68,29 +68,10 @@ object StreamPhash {
     sigs.join(vsIndex.union(intra).distinct(), Seq("media_id"), "left_anti")
   }
 
-  /** Start the screen on a stream with columns (media_id: long, kind:
-    * string, text: string — the payload the decode stub signs): survivors
-    * append to `outDir`, their signatures to `indexDir` (old_id, kind,
-    * old_sig). An existing index (e.g. the batch pipeline's) is honored. */
-  def run(stream: DataFrame, indexDir: String, outDir: String,
-          checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val index = DeltaLog.emptyOr(spark, indexDir, IndexDdl)
-        val kept = screenBatch(batch, index)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.select(col("media_id"), col("kind"), col("text"))
-            .write.mode("append").parquet(outDir)
-          kept.select(col("media_id").as("old_id"), col("kind"),
-            col("ah").as("old_sig"))
-            .write.mode("append").parquet(indexDir)
-        } finally kept.unpersist()
-        if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-          Compaction.compact(spark, indexDir)
-        ()
-      }
-      .start()
+  protected def screen(batch: DataFrame, index: DataFrame) =
+    (screenBatch(batch, index), Nil)
+
+  protected def indexRows(kept: DataFrame): DataFrame =
+    kept.select(col("media_id").as("old_id"), col("kind"),
+      col("ah").as("old_sig"))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Similarity
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming SEMANTIC near-duplicate screen — the embedding-space sibling of
   * [[StreamSimhash]] and the streaming twin of the batch sign-LSH near-dup
@@ -21,20 +20,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * the same plane family, so a batch-built index and a stream-built index
   * are interchangeable parquet layouts: (old_id, old_emb, old_nrm, bucket).
   *
-  * Same replay contract as StreamSimhash: survivors are written to `outDir`
-  * BEFORE their signatures land in `indexDir` (at-least-once output; an
-  * index-first crash would silently drop the replayed batch), and
-  * self-matches are excluded by id so a replayed row never suppresses
-  * itself.
+  * Same exactly-once replay contract as StreamSimhash ([[Screen]]):
+  * survivors `(vec_id, embedding)` and their index rows are batch deltas
+  * under `<logDir>/survivors` and `<logDir>/index`, and self-matches are
+  * excluded by id.
   */
-object StreamSemDedup {
+object StreamSemDedup extends Screen {
 
-  /** Signature-index schema (the flat append dir screenBatch probes) —
-    * [[DeltaLog.emptyOr]] serves the empty index on the first batch,
-    * replacing the per-module fs.exists dance. */
+  /** Delta-log schemas as [[append]] writes them (FreshMaintainerSpec). */
   private[graft] val IndexDdl =
     "old_id BIGINT,old_emb ARRAY<FLOAT>,old_nrm DOUBLE" +
       ",bucket BIGINT"
+  private[graft] val SurvivorsDdl = "vec_id BIGINT,embedding ARRAY<FLOAT>"
+
+  private[graft] val Index = DeltaLog.Log("index", "", IndexDdl)
+  private[graft] val Survivors = DeltaLog.Log("survivors", "", SurvivorsDdl)
 
   private def dotFast(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
     call_function("dot_f32_fast", a, b)
@@ -77,30 +77,10 @@ object StreamSemDedup {
     sigs.join(suppressed, Seq("vec_id"), "left_anti")
   }
 
-  /** Start the screen on a stream with columns (vec_id: long, embedding:
-    * array<float>): survivors append to `outDir` (vec_id, embedding), their
-    * index rows to `indexDir`. An existing (batch-built) index is honored;
-    * a missing one starts empty. `compactEvery` as in [[StreamSimhash.run]]
-    * — per-batch appends are a file-listing liability at ingest scale. */
-  def run(stream: DataFrame, indexDir: String, outDir: String,
-          checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val index = DeltaLog.emptyOr(spark, indexDir, IndexDdl)
-        val kept = screenBatch(batch, index)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.select(col("vec_id"), col("embedding"))
-            .write.mode("append").parquet(outDir)
-          kept.select(col("vec_id").as("old_id"), col("embedding").as("old_emb"),
-            col("nrm").as("old_nrm"), col("bucket"))
-            .write.mode("append").parquet(indexDir)
-        } finally kept.unpersist()
-        if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-          Compaction.compact(spark, indexDir)
-        ()
-      }
-      .start()
+  protected def screen(batch: DataFrame, index: DataFrame) =
+    (screenBatch(batch, index), Nil)
+
+  protected def indexRows(kept: DataFrame): DataFrame =
+    kept.select(col("vec_id").as("old_id"), col("embedding").as("old_emb"),
+      col("nrm").as("old_nrm"), col("bucket"))
 }

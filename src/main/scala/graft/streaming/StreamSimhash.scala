@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming SimHash near-duplicate screen — the streaming twin of the batch
   * incremental dedup (graft.operators.Dedup qDedupIncremental): an ingest
@@ -23,21 +22,25 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * from shared buckets, never batch × index), so per-batch cost is
   * candidates, not corpus.
   *
-  * Ordering/replay contract: survivors are written to `outDir` BEFORE their
-  * signatures land in `indexDir`, so a crash between the writes re-emits the
-  * batch on recovery (at-least-once output) rather than silently dropping
-  * it (index-first would suppress the replay against the doc's own
-  * signature). Replayed signature appends at worst duplicate index rows,
-  * which only re-generate the same candidates; self-matches are excluded by
-  * doc_id so a replayed document never suppresses itself.
+  * Replay contract ([[Screen]]): survivors `(doc_id, text)` and their
+  * signatures land as batch deltas under `<logDir>/survivors` and
+  * `<logDir>/index`; the probe leaves out the batch's own index delta, so
+  * a replay emits each survivor exactly once. A batch-built index may sit
+  * as flat files at the top of `<logDir>/index`; its rows are probed like
+  * any delta. Self-matches are excluded by doc_id as well, so a document
+  * already in such an index never suppresses itself.
   */
-object StreamSimhash {
+object StreamSimhash extends Screen {
 
-  /** Signature-index schema (the flat append dir screenBatch probes) —
-    * [[DeltaLog.emptyOr]] serves the empty index on the first batch,
-    * replacing the per-module fs.exists dance. */
+  /** Delta-log schemas as [[append]] writes them — pinned against the
+    * writer by FreshMaintainerSpec; [[DeltaLog.emptyOr]] serves the empty
+    * index on the first batch. */
   private[graft] val IndexDdl =
     "old_id BIGINT,old_sig BIGINT" // simhash32 is LongType
+  private[graft] val SurvivorsDdl = "doc_id BIGINT,text STRING"
+
+  private[graft] val Index = DeltaLog.Log("index", "", IndexDdl)
+  private[graft] val Survivors = DeltaLog.Log("survivors", "", SurvivorsDdl)
 
   val HammingMax = 3
 
@@ -77,38 +80,9 @@ object StreamSimhash {
     sigs.join(vsIndex.union(intra).distinct(), Seq("doc_id"), "left_anti")
   }
 
-  /** Start the screen on a stream with columns (doc_id: long, text: string):
-    * survivors append to `outDir` (doc_id, text), their signatures to
-    * `indexDir` (old_id, old_sig). An existing index (e.g. built by the
-    * batch pipeline) is honored; a missing one starts empty.
-    *
-    * `compactEvery` > 0 compacts the index directory every that many
-    * batches (after the append): the per-batch appends otherwise
-    * accumulate one small file per batch per partition, and at ingest
-    * scale the probe's read cost becomes file-listing-bound long before it
-    * is data-bound. Inside foreachBatch is the documented no-reader-races
-    * window Compaction requires — the next batch's probe reads only after
-    * the swap completes. */
-  def run(stream: DataFrame, indexDir: String, outDir: String,
-          checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val index = DeltaLog.emptyOr(spark, indexDir, IndexDdl)
-        // survivors are consumed twice (outDir + index append): persist so
-        // the banded joins run once, not per sink
-        val kept = screenBatch(batch, index)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.select(col("doc_id"), col("text"))
-            .write.mode("append").parquet(outDir)
-          kept.select(col("doc_id").as("old_id"), col("simhash").as("old_sig"))
-            .write.mode("append").parquet(indexDir)
-        } finally kept.unpersist()
-        if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-          Compaction.compact(spark, indexDir)
-        ()
-      }
-      .start()
+  protected def screen(batch: DataFrame, index: DataFrame) =
+    (screenBatch(batch, index), Nil)
+
+  protected def indexRows(kept: DataFrame): DataFrame =
+    kept.select(col("doc_id").as("old_id"), col("simhash").as("old_sig"))
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import graft.operators.Dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming winnowing-overlap screen — the streaming twin of
   * q_winnow_overlap, and the PASSAGE-level complement of [[StreamSimhash]]:
@@ -14,11 +13,11 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * an already-kept passage, which whole-document signatures miss once
   * enough novel framing is added around the copied core.
   *
-  * Same `foreachBatch` + durable-index contract as StreamSimhash (the
-  * index is (fp, old_id) fingerprint postings shared with batch jobs;
-  * survivors-out BEFORE index-append keeps replay at-least-once;
-  * self-matches excluded by doc_id so a replayed document never suppresses
-  * itself). Per-batch cost: the probe joins the batch's fingerprints
+  * Same exactly-once durable-index contract as StreamSimhash ([[Screen]]:
+  * the index is (fp, old_id) fingerprint postings shared with batch jobs;
+  * survivors `(doc_id, text)` and postings are batch deltas under
+  * `<logDir>/survivors` and `<logDir>/index`; self-matches excluded by
+  * doc_id). Per-batch cost: the probe joins the batch's fingerprints
   * (~2/(w+1) of its gram stream) against the index on the fp hash —
   * candidates only, never batch × corpus.
   *
@@ -27,13 +26,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * cross-document counts would let MinShared coincidences with unrelated
   * documents suppress a novel one.
   */
-object StreamWinnow {
+object StreamWinnow extends Screen {
 
-  /** Signature-index schema (the flat append dir screenBatch probes) —
-    * [[DeltaLog.emptyOr]] serves the empty index on the first batch,
-    * replacing the per-module fs.exists dance. */
+  /** Delta-log schemas as [[append]] writes them (FreshMaintainerSpec). */
   private[graft] val IndexDdl =
     "fp STRING,old_id BIGINT"
+  private[graft] val SurvivorsDdl = "doc_id BIGINT,text STRING"
+
+  private[graft] val Index = DeltaLog.Log("index", "", IndexDdl)
+  private[graft] val Survivors = DeltaLog.Log("survivors", "", SurvivorsDdl)
 
   /** Same threshold as the batch overlap report. */
   val MinShared: Int = Dedup.WinnowMinShared
@@ -43,12 +44,12 @@ object StreamWinnow {
       col("text"), lit(Dedup.WinnowN), lit(Dedup.WinnowW))).as("fp"))
 
   /** doc_ids of `bf` (doc_id, fp) sharing ≥ MinShared DISTINCT fingerprints
-    * with one document of `index` (fp, old_id); self-pairs excluded
-    * (replay). countDistinct, not count: a checkpoint-recovery replay can
-    * duplicate (fp, old_id) index rows, and raw row counts would double
-    * every shared tally and falsely suppress future documents (round-11
-    * review catch — the 'duplicate index rows are harmless' contract holds
-    * for SimHash's exists-semantics, not for a count threshold). */
+    * with one document of `index` (fp, old_id); self-pairs excluded.
+    * countDistinct, not count: a batch-built index can hold duplicate
+    * (fp, old_id) rows, and raw row counts would double every shared
+    * tally and falsely suppress future documents (round-11 review catch —
+    * duplicate index rows are harmless for SimHash's exists-semantics,
+    * not for a count threshold). */
   private def matchedAgainst(bf: DataFrame, index: DataFrame): DataFrame =
     bf.join(index, Seq("fp"))
       .filter(col("doc_id") =!= col("old_id"))
@@ -63,7 +64,7 @@ object StreamWinnow {
     * ("boilerplate, not evidence of pairwise copying"), and the screen
     * must too, or two unrelated documents sharing a common header/footer
     * suppress each other at ingest (review catch). Distinct doc counts
-    * throughout, so replay-duplicated index rows do not shift the cap. */
+    * throughout, so duplicated index rows do not shift the cap. */
   private def hotFingerprints(bf: DataFrame, index: DataFrame): DataFrame = {
     val postings = index.select(col("fp"), col("old_id"))
       .union(bf.select(col("fp"), col("doc_id").as("old_id")))
@@ -86,7 +87,7 @@ object StreamWinnow {
     * Also returns the persisted per-batch fingerprint relation: it backs
     * BOTH survivor-side joins lazily, so only the caller (after its sinks
     * have materialized the survivors) can safely unpersist it — returning
-    * it is what lets run() release the cache per batch instead of leaking
+    * it is what lets [[screen]] release the cache per batch instead of leaking
     * one relation per micro-batch for the ContextCleaner to find. */
   private[streaming] def screenBatch(batch: DataFrame, index: DataFrame): (DataFrame, DataFrame) = {
     // the fingerprint projection feeds the index probe AND the intra-batch
@@ -114,31 +115,11 @@ object StreamWinnow {
       bfRaw)
   }
 
-  /** Start the screen on a stream with columns (doc_id: long, text: string):
-    * survivors append to `outDir` (doc_id, text), their fingerprint
-    * postings to `indexDir` (fp, old_id). An existing index (e.g. built by
-    * a batch job from winnow_hashes) is honored; a missing one starts
-    * empty. `compactEvery` as in StreamSimhash. */
-  def run(stream: DataFrame, indexDir: String, outDir: String,
-          checkpointDir: String, compactEvery: Int = 0): StreamingQuery =
-    stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val index = DeltaLog.emptyOr(spark, indexDir, IndexDdl)
-        val (survivors, bf) = screenBatch(batch, index)
-        val kept = survivors
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          kept.select(col("doc_id"), col("text"))
-            .write.mode("append").parquet(outDir)
-          fingerprints(kept)
-            .select(col("fp"), col("doc_id").as("old_id"))
-            .write.mode("append").parquet(indexDir)
-        } finally { kept.unpersist(); bf.unpersist() }
-        if (compactEvery > 0 && batchId % compactEvery == (compactEvery - 1).toLong)
-          Compaction.compact(spark, indexDir)
-        ()
-      }
-      .start()
+  protected def screen(batch: DataFrame, index: DataFrame) = {
+    val (survivors, bf) = screenBatch(batch, index)
+    (survivors, Seq(bf))
+  }
+
+  protected def indexRows(kept: DataFrame): DataFrame =
+    fingerprints(kept).select(col("fp"), col("doc_id").as("old_id"))
 }

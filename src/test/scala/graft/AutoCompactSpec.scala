@@ -16,7 +16,8 @@ import java.nio.file.Files
   *     count);
   *  3. every readout is bit-identical to its batch twin ACROSS the
   *     compaction boundary (the fold sees the same additive rows, just
-  *     re-filed);
+  *     re-filed) — for a screen, whose survivors depend on batch order,
+  *     the twin is its rule replayed batch by batch in plain Scala;
   *  4. recovery replay of the LAST batch (the only one checkpoint
   *     recovery can re-run) after compaction leaves readouts unchanged
   *     (fixed-path overwrite hits a dir the keepLast guard never
@@ -205,5 +206,61 @@ class AutoCompactSpec extends SparkSpec {
     // recovery replay of the LAST batch
     IngestHub.processBatch(slice(NBatches - 1), (NBatches - 1).toLong, base)
     for ((readout, batch) <- pairs) assert(rows(readout()) === batch)
+  }
+
+  test("StreamSimhash: auto-compacts BOTH logs past the threshold; survivors equal an uncompacted run + recovery") {
+    import graft.streaming.StreamSimhash
+    import org.apache.spark.sql.functions.call_function
+    val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
+    val logDir = Files.createTempDirectory("graft-ac-simhash").toString
+    def slice(s: Int) = docs.filter($"doc_id" % NBatches === s)
+    for (s <- 0 until NBatches)
+      StreamSimhash.processBatch(slice(s), s.toLong, logDir)
+    for (sub <- Seq("survivors", "index")) {
+      val nDirs = batchDirCount(s"$logDir/$sub")
+      assert(nDirs < NBatches - 2, s"$sub never compacted: $nDirs dirs")
+      assert(new java.io.File(s"$logDir/$sub").listFiles()
+        .exists(f => f.isDirectory && f.getName.startsWith("compacted-")),
+        s"$sub holds no compacted dir")
+    }
+    // the uncompacted run: the screen's rule replayed batch by batch in
+    // plain Scala over the signatures (the 4x8-bit banding is complete at
+    // Hamming <= 3, so candidate pairs are all near pairs)
+    val sigs = docs.select($"doc_id", call_function("simhash32", $"text"))
+      .as[(Long, Long)].collect().toSeq
+    def near(a: Long, b: Long) =
+      java.lang.Long.bitCount(a ^ b) <= StreamSimhash.HammingMax
+    val kept = (0 until NBatches).foldLeft(Seq.empty[(Long, Long)]) {
+      (index, s) =>
+        val batch = sigs.filter(_._1 % NBatches == s)
+        index ++ batch.filter { case (id, sg) =>
+          !index.exists { case (o, os) => o != id && near(sg, os) } &&
+          !batch.exists { case (o, os) => o < id && near(sg, os) }
+        }
+    }
+    def survivors = StreamSimhash.survivors(spark, logDir)
+      .select($"doc_id").as[Long].collect().toSeq.sorted
+    val expected = kept.map(_._1).sorted
+    assert(expected.nonEmpty)
+    assert(survivors === expected)
+    assert(StreamSimhash.Index.read(spark, logDir).as[(Long, Long)]
+      .collect().toSeq.sorted === kept.sorted)
+    // recovery replay of the LAST batch: its probe is the index without
+    // the batch's own delta
+    val last = sigs.map(_._1).filter(_ % NBatches == NBatches - 1).toSet
+    assert(StreamSimhash.Index.readExcept(spark, logDir, (NBatches - 1).toLong)
+      .as[(Long, Long)].collect().toSeq.sorted
+      === kept.filterNot(k => last(k._1)).sorted)
+    StreamSimhash.processBatch(slice(NBatches - 1), (NBatches - 1).toLong,
+      logDir)
+    assert(survivors === expected)
+    // a re-send of a document whose deltas were compacted away
+    val (first, _) = kept.head
+    assert(first % NBatches == 0)
+    StreamSimhash.processBatch(
+      docs.filter($"doc_id" === first)
+        .select(($"doc_id" + sigs.map(_._1).max + 1).as("doc_id"), $"text"),
+      NBatches.toLong, logDir)
+    assert(survivors === expected)
   }
 }

@@ -3,32 +3,10 @@ package graft
 import graft.streaming.Compaction
 import java.nio.file.Files
 
-/** Small-file compaction: many per-batch files collapse to the computed
-  * target count with identical data; an already-compact dir is untouched. */
+/** Delta-log compaction: a maintainer's nested batch dirs fold into one
+  * `compacted-<N>.parquet` with bit-equal readouts, and both interrupted
+  * publish states recover without losing deltas. */
 class CompactionSpec extends SparkSpec {
-  import spark.implicits._
-
-  test("compacts many small files into the target count, data intact") {
-    val dir = Files.createTempDirectory("graft-compact").toString + "/metrics"
-    // 12 single-file appends, like 12 micro-batches
-    for (b <- 0 until 12)
-      Seq((b.toLong, s"batch$b")).toDF("id", "tag")
-        .coalesce(1).write.mode("append").parquet(dir)
-    val before = spark.read.parquet(dir).as[(Long, String)].collect().toSet
-    assert(before.size === 12)
-
-    // huge target => everything fits one file
-    val (nBefore, nAfter) = Compaction.compact(spark, dir, targetBytes = 1L << 30)
-    assert(nBefore === 12 && nAfter === 1)
-    assert(spark.read.parquet(dir).as[(Long, String)].collect().toSet === before)
-
-    // idempotent: already compact
-    assert(Compaction.compact(spark, dir, targetBytes = 1L << 30) === ((1, 1)))
-  }
-
-  test("missing directory is a no-op") {
-    assert(Compaction.compact(spark, "/tmp/graft-no-such-dir-xyz") === ((0, 0)))
-  }
 
   test("compactLog folds a maintainer's nested batch dirs; readouts bit-equal") {
     import spark.implicits._
@@ -44,11 +22,6 @@ class CompactionSpec extends SparkSpec {
     val bm = rows(graft.streaming.StreamIndex.bm25(spark, logDir))
     val ql = rows(graft.streaming.StreamIndex.ql(spark, logDir))
     assert(bm.nonEmpty && ql.nonEmpty)
-
-    // plain compact() is structurally blind to the nested layout -- it
-    // must report a no-op, NOT destroy anything (the round-15 find: the
-    // maintainers' docs used to point at it)
-    assert(Compaction.compact(spark, s"$logDir/postings") === ((0, 0)))
 
     // fold all but the newest batch dir into compacted-<N>.parquet
     assert(Compaction.compactLog(spark, s"$logDir/postings", keepLast = 1)

@@ -100,7 +100,14 @@ class FreshMaintainerSpec extends SparkSpec {
       ("StreamXent", "heldout", 0L, d => StreamXent.heldout(spark, d)),
       ("StreamXent", "scaling", 0L, d => StreamXent.scaling(spark, d)),
       ("StreamCanary", "exposure", 0L, d => StreamCanary.exposure(spark, d)),
-      ("StreamBt", "strengths", 0L, d => StreamBt.strengths(spark, d)))
+      ("StreamBt", "strengths", 0L, d => StreamBt.strengths(spark, d)),
+      ("StreamSimhash", "survivors", 0L,
+        d => StreamSimhash.survivors(spark, d)),
+      ("StreamSemDedup", "survivors", 0L,
+        d => StreamSemDedup.survivors(spark, d)),
+      ("StreamPhash", "survivors", 0L, d => StreamPhash.survivors(spark, d)),
+      ("StreamWinnow", "survivors", 0L,
+        d => StreamWinnow.survivors(spark, d)))
 
   for ((mod, ro, expected, mk) <- readouts)
     test(s"$mod.$ro: fresh maintainer degrades to $expected rows, no throw") {
@@ -279,4 +286,21 @@ class FreshMaintainerSpec extends SparkSpec {
       d => StreamPsi.processBatch(v, s"$refDir/p", 0L, d)))
       === norm(StreamPsi.DeltaDdl))
   }
+
+  private lazy val screens: Seq[(String, Screen, () => DataFrame)] = Seq(
+    ("StreamSimhash", StreamSimhash, () => docs.select($"doc_id", $"text")),
+    ("StreamSemDedup", StreamSemDedup, () => Tables.embeddings(spark, sf)
+      .limit(30).select($"vec_id", $"embedding")),
+    ("StreamPhash", StreamPhash, () => docs.select($"doc_id".as("media_id"),
+      lit("image").as("kind"), $"text")),
+    ("StreamWinnow", StreamWinnow, () => docs.select($"doc_id", $"text")))
+
+  for ((mod, screen, batch) <- screens)
+    test(s"$mod: Index/Survivors DDLs pin the written delta schemas") {
+      val d = Files.createTempDirectory("graft-ddlpin-screen").toString
+      screen.processBatch(batch(), 0L, d)
+      for (log <- Seq(screen.Index, screen.Survivors))
+        assert(norm(spark.read.option("recursiveFileLookup", "true")
+          .parquet(s"$d/${log.sub}").schema.toDDL) === norm(log.ddl))
+    }
 }

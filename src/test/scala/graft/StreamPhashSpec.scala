@@ -4,6 +4,7 @@ import graft.multimodal.Media
 import graft.streaming.StreamPhash
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** Streaming media pHash screen end-to-end: multi-batch replay with
@@ -16,6 +17,10 @@ class StreamPhashSpec extends SparkSpec {
   private val pA = "fast stream dedup keeps the first copy of every object"
   private val pB = "completely unrelated payload about brown foxes and lazy dogs"
   private val pC = "the quick onyx goblin jumps over the silver query planner"
+
+  private def startScreen(stream: org.apache.spark.sql.DataFrame,
+      logDir: String) =
+    StreamPhash.run(stream, logDir, Trigger.ProcessingTime(0L))
 
   private def sig(payload: String): Long =
     Seq(payload).toDF("text")
@@ -31,10 +36,8 @@ class StreamPhashSpec extends SparkSpec {
 
   test("multi-batch replay: same-kind near-dups suppressed, other modalities untouched") {
     val base = Files.createTempDirectory("graft-sphash").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, String, String)](spark)
-    val q = StreamPhash.run(in.toDF().toDF("media_id", "kind", "text"),
-      indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("media_id", "kind", "text"), base)
     try {
       // batch 1: 10 is an intra-batch image dup of 0 (keep-lowest drops
       // it); 1 carries the SAME payload as audio — modality scoping keeps it
@@ -47,11 +50,11 @@ class StreamPhashSpec extends SparkSpec {
         (6L, "image", pC))
       q.processAllAvailable()
 
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamPhash.survivors(spark, base)
         .select($"media_id").as[Long].collect().toSeq.sorted
       assert(kept === Seq(0L, 1L, 2L, 5L, 6L))
       // index: survivors' signatures under their own modality
-      val idx = spark.read.parquet(indexDir)
+      val idx = StreamPhash.Index.read(spark, base)
         .as[(Long, String, Long)].collect()
         .map(r => r._1 -> ((r._2, r._3))).toMap
       assert(idx.keySet === Set(0L, 1L, 2L, 5L, 6L))
@@ -68,10 +71,8 @@ class StreamPhashSpec extends SparkSpec {
     // PERSISTED index while still keeping the same payload in a different
     // modality (the scoping contract must survive recovery too)
     val base = Files.createTempDirectory("graft-sphash-restart").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, String, String)](spark)
-    def start() = StreamPhash.run(in.toDF().toDF("media_id", "kind", "text"),
-      indexDir, outDir, ckpt)
+    def start() = startScreen(in.toDF().toDF("media_id", "kind", "text"), base)
 
     val q1 = start()
     try { in.addData((0L, "image", pA), (1L, "image", pB)); q1.processAllAvailable() }
@@ -83,41 +84,41 @@ class StreamPhashSpec extends SparkSpec {
     val q2 = start()
     try { q2.processAllAvailable() } finally q2.stop()
 
-    val kept = spark.read.parquet(outDir)
+    val kept = StreamPhash.survivors(spark, base)
       .select($"media_id").as[Long].collect().toSeq.sorted
     assert(kept === Seq(0L, 1L, 3L))
-    val idx = spark.read.parquet(indexDir)
+    val idx = StreamPhash.Index.read(spark, base)
       .as[(Long, String, Long)].collect().map(r => r._1 -> r._2).toMap
     assert(idx === Map(0L -> "image", 1L -> "image", 3L -> "audio"))
   }
 
   test("crash-window replay re-emits survivors, never self-suppresses") {
-    // lost-commit recovery: a fresh checkpoint replays the memory source
-    // from offset 0 against an index already holding the batch's own
-    // signatures — replayed objects must RE-EMIT (self-matches excluded by
-    // media_id), and the duplicated index rows must neither suppress novel
-    // media nor weaken suppression of true same-kind near-dups
-    val base = Files.createTempDirectory("graft-sphash-crash").toString
-    val (indexDir, outDir) = (s"$base/index", s"$base/out")
-    val in = MemoryStream[(Long, String, String)](spark)
-    def start(ckpt: String) = StreamPhash.run(
-      in.toDF().toDF("media_id", "kind", "text"), indexDir, outDir, s"$base/$ckpt")
+    // lost-commit recovery, driven at the processBatch layer: the committed
+    // batch re-runs under its own id against an index already holding its
+    // signatures. The probe leaves that delta out, so the replay recomputes
+    // the same survivors and replaces its own files — the plain reads
+    // equal a fault-free run (exactly-once), and a true same-kind near-dup
+    // of a replayed object is still suppressed
+    def media(rows: (Long, String, String)*) = rows.toDF("media_id", "kind", "text")
+    def drive(logDir: String, replay: Boolean): Unit = {
+      val b0 = media((0L, "image", pA), (1L, "audio", pB))
+      StreamPhash.processBatch(b0, 0L, logDir)
+      if (replay) StreamPhash.processBatch(b0, 0L, logDir)
+      StreamPhash.processBatch(media((5L, "video", pC)), 1L, logDir) // novel
+      StreamPhash.processBatch(media((6L, "image", pA)), 2L, logDir) // near-dup
+    }
+    val replayed = Files.createTempDirectory("graft-sphash-crash").toString
+    val clean = Files.createTempDirectory("graft-sphash-clean").toString
+    drive(replayed, replay = true)
+    drive(clean, replay = false)
 
-    val q1 = start("ckpt1")
-    try { in.addData((0L, "image", pA), (1L, "audio", pB)); q1.processAllAvailable() }
-    finally q1.stop()
-
-    val q2 = start("ckpt2")
-    try {
-      q2.processAllAvailable()             // replay of the committed delivery
-      in.addData((5L, "video", pC))        // novel object after the replay
-      q2.processAllAvailable()
-      in.addData((6L, "image", pA))        // true near-dup, twice-indexed kind
-      q2.processAllAvailable()
-    } finally q2.stop()
-
-    val emitted = spark.read.parquet(outDir)
+    def survivors(d: String) = StreamPhash.survivors(spark, d)
       .select($"media_id").as[Long].collect().toSeq.sorted
-    assert(emitted === Seq(0L, 0L, 1L, 1L, 5L))
+    def index(d: String) = StreamPhash.Index.read(spark, d)
+      .as[(Long, String, Long)].collect().toSeq.sorted
+    assert(survivors(replayed) === Seq(0L, 1L, 5L))
+    assert(survivors(replayed) === survivors(clean))
+    assert(index(replayed).map(_._1) === Seq(0L, 1L, 5L))
+    assert(index(replayed) === index(clean))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import graft.streaming.StreamSemDedup
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** Streaming semantic near-dup screen end-to-end: multi-batch replay with
@@ -12,15 +13,17 @@ import java.nio.file.Files
 class StreamSemDedupSpec extends SparkSpec {
   import spark.implicits._
 
+  private def startScreen(stream: org.apache.spark.sql.DataFrame,
+      logDir: String) =
+    StreamSemDedup.run(stream, logDir, Trigger.ProcessingTime(0L))
+
   private def unit(d: Int): Array[Float] =
     Array.tabulate(8)(i => if (i == d) 1f else 0f)
 
   test("multi-batch replay: semantic dups suppressed within and across batches") {
     val base = Files.createTempDirectory("graft-ssem").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, Array[Float])](spark)
-    val q = StreamSemDedup.run(in.toDF().toDF("vec_id", "embedding"),
-      indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("vec_id", "embedding"), base)
     try {
       // batch 1: vec 10 duplicates vec 0 -> intra-batch keep-lowest drops it
       in.addData((0L, unit(0)), (10L, unit(0)), (1L, unit(1)))
@@ -32,11 +35,11 @@ class StreamSemDedupSpec extends SparkSpec {
       in.addData((4L, unit(2)), (5L, unit(3)))
       q.processAllAvailable()
 
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamSemDedup.survivors(spark, base)
         .select($"vec_id").as[Long].collect().toSeq.sorted
       assert(kept === Seq(0L, 1L, 3L, 5L))
       // the index carries exactly the survivors, in the batch query's layout
-      val idx = spark.read.parquet(indexDir)
+      val idx = StreamSemDedup.Index.read(spark, base)
       assert(idx.columns.sorted === Seq("bucket", "old_emb", "old_id", "old_nrm"))
       assert(idx.select($"old_id").as[Long].collect().toSeq.sorted
         === Seq(0L, 1L, 3L, 5L))
@@ -51,10 +54,8 @@ class StreamSemDedupSpec extends SparkSpec {
     // ingest cannot afford to reset on restart. Chain-free fixture, so the
     // final survivor set equals the single-pass batch screen on all rows.
     val base = Files.createTempDirectory("graft-ssem-restart").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, Array[Float])](spark)
-    def start() = StreamSemDedup.run(in.toDF().toDF("vec_id", "embedding"),
-      indexDir, outDir, ckpt)
+    def start() = startScreen(in.toDF().toDF("vec_id", "embedding"), base)
 
     val q1 = start()
     try { in.addData((0L, unit(0)), (1L, unit(1))); q1.processAllAvailable() }
@@ -64,56 +65,54 @@ class StreamSemDedupSpec extends SparkSpec {
     val q2 = start()
     try { q2.processAllAvailable() } finally q2.stop()
 
-    val kept = spark.read.parquet(outDir)
+    val kept = StreamSemDedup.survivors(spark, base)
       .select($"vec_id").as[Long].collect().toSeq.sorted
     assert(kept === Seq(0L, 1L, 3L))
-    assert(spark.read.parquet(indexDir)
+    assert(StreamSemDedup.Index.read(spark, base)
       .select($"old_id").as[Long].collect().toSeq.sorted === Seq(0L, 1L, 3L))
   }
 
   test("crash-window replay re-emits survivors, never self-suppresses") {
-    // the lost-commit recovery path: a fresh checkpoint replays the memory
-    // source from offset 0, re-running the committed batch against an index
-    // that already holds its own rows — the replayed vectors must RE-EMIT
-    // (self-matches excluded by vec_id; index-first ordering would swallow
-    // them), and the duplicated index rows must not suppress novel vectors
-    val base = Files.createTempDirectory("graft-ssem-crash").toString
-    val (indexDir, outDir) = (s"$base/index", s"$base/out")
-    val in = MemoryStream[(Long, Array[Float])](spark)
-    def start(ckpt: String) = StreamSemDedup.run(
-      in.toDF().toDF("vec_id", "embedding"), indexDir, outDir, s"$base/$ckpt")
+    // the lost-commit recovery path, driven at the processBatch layer: the
+    // committed batch re-runs under its own id against an index that
+    // already holds its delta. The probe leaves that delta out, so the
+    // replay recomputes the same survivors and replaces its own files —
+    // the plain reads equal a fault-free run (exactly-once), and a true
+    // dup of a replayed vector is still suppressed
+    def vecs(rows: (Long, Array[Float])*) = rows.toDF("vec_id", "embedding")
+    def drive(logDir: String, replay: Boolean): Unit = {
+      StreamSemDedup.processBatch(vecs((0L, unit(0)), (1L, unit(1))), 0L, logDir)
+      if (replay)
+        StreamSemDedup.processBatch(vecs((0L, unit(0)), (1L, unit(1))), 0L, logDir)
+      StreamSemDedup.processBatch(vecs((5L, unit(2))), 1L, logDir) // novel
+      StreamSemDedup.processBatch(vecs((6L, unit(0))), 2L, logDir) // true dup
+    }
+    val replayed = Files.createTempDirectory("graft-ssem-crash").toString
+    val clean = Files.createTempDirectory("graft-ssem-clean").toString
+    drive(replayed, replay = true)
+    drive(clean, replay = false)
 
-    val q1 = start("ckpt1")
-    try { in.addData((0L, unit(0)), (1L, unit(1))); q1.processAllAvailable() }
-    finally q1.stop()
-
-    val q2 = start("ckpt2")
-    try {
-      q2.processAllAvailable()           // replay of the committed delivery
-      in.addData((5L, unit(2)))          // novel vector after the replay
-      q2.processAllAvailable()
-      in.addData((6L, unit(0)))          // true dup of the twice-indexed vec
-      q2.processAllAvailable()
-    } finally q2.stop()
-
-    val emitted = spark.read.parquet(outDir)
+    def survivors(d: String) = StreamSemDedup.survivors(spark, d)
       .select($"vec_id").as[Long].collect().toSeq.sorted
-    assert(emitted === Seq(0L, 0L, 1L, 1L, 5L))
+    def index(d: String) = StreamSemDedup.Index.read(spark, d)
+      .select($"old_id", $"bucket").as[(Long, Long)].collect().toSeq.sorted
+    assert(survivors(replayed) === Seq(0L, 1L, 5L))
+    assert(survivors(replayed) === survivors(clean))
+    assert(index(replayed).map(_._1) === Seq(0L, 1L, 5L))
+    assert(index(replayed) === index(clean))
   }
 
   test("below-threshold vectors in the same bucket survive the exact-cosine gate") {
     val base = Files.createTempDirectory("graft-ssem-thr").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, Array[Float])](spark)
-    val q = StreamSemDedup.run(in.toDF().toDF("vec_id", "embedding"),
-      indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("vec_id", "embedding"), base)
     try {
       in.addData((0L, unit(0)))
       q.processAllAvailable()
       // cosine(v, unit(0)) = 0.6 < 0.9: kept even if LSH buckets collide
       in.addData((1L, Array(0.6f, 0.8f, 0f, 0f, 0f, 0f, 0f, 0f)))
       q.processAllAvailable()
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamSemDedup.survivors(spark, base)
         .select($"vec_id").as[Long].collect().toSeq.sorted
       assert(kept === Seq(0L, 1L))
     } finally q.stop()

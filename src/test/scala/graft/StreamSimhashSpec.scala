@@ -3,6 +3,7 @@ package graft
 import graft.streaming.StreamSimhash
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** Streaming SimHash near-dup screen end-to-end: multi-batch replay with
@@ -15,6 +16,10 @@ class StreamSimhashSpec extends SparkSpec {
   private val tB = "completely unrelated sentence about brown foxes and lazy dogs"
   private val tC = "the quick onyx goblin jumps over the silver query planner"
   private val tD = "spark partitions shuffle data across executors for joins"
+
+  private def startScreen(stream: org.apache.spark.sql.DataFrame,
+      logDir: String) =
+    StreamSimhash.run(stream, logDir, Trigger.ProcessingTime(0L))
 
   private def sig(text: String): Long =
     Seq(text).toDF("text")
@@ -30,9 +35,8 @@ class StreamSimhashSpec extends SparkSpec {
 
   test("multi-batch replay: near-dups suppressed within and across batches") {
     val base = Files.createTempDirectory("graft-ssim").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamSimhash.run(in.toDF().toDF("doc_id", "text"), indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("doc_id", "text"), base)
     try {
       // batch 1: doc 10 is an intra-batch dup of doc 0 -> keep-lowest drops it
       in.addData((0L, tA), (10L, tA), (1L, tB))
@@ -44,40 +48,15 @@ class StreamSimhashSpec extends SparkSpec {
       in.addData((4L, tC), (5L, tD))
       q.processAllAvailable()
 
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamSimhash.survivors(spark, base)
         .select($"doc_id").as[Long].collect().toSeq.sorted
       assert(kept === Seq(0L, 1L, 3L, 5L))
       // the index holds exactly the survivors' signatures
-      val idx = spark.read.parquet(indexDir)
+      val idx = StreamSimhash.Index.read(spark, base)
         .as[(Long, Long)].collect().toMap
       assert(idx.keySet === Set(0L, 1L, 3L, 5L))
       assert(idx(0L) === sig(tA))
       assert(idx(3L) === sig(tC))
-    } finally q.stop()
-  }
-
-  test("compactEvery folds the per-batch index appends into one file, content intact") {
-    val base = Files.createTempDirectory("graft-ssim-compact").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
-    val in = MemoryStream[(Long, String)](spark)
-    val q = StreamSimhash.run(in.toDF().toDF("doc_id", "text"),
-      indexDir, outDir, ckpt, compactEvery = 1)
-    try {
-      in.addData((0L, tA)); q.processAllAvailable()
-      in.addData((1L, tB)); q.processAllAvailable()
-      in.addData((2L, tC)); q.processAllAvailable()
-      import scala.jdk.CollectionConverters._
-      val dataFiles = java.nio.file.Files.list(java.nio.file.Paths.get(indexDir))
-        .iterator().asScala.count(_.toString.endsWith(".parquet"))
-      assert(dataFiles === 1, s"3 batch appends should compact to 1 file, found $dataFiles")
-      val ids = spark.read.parquet(indexDir)
-        .select($"old_id").as[Long].collect().toSeq.sorted
-      assert(ids === Seq(0L, 1L, 2L))
-      // and the probe path still works against the compacted index
-      in.addData((3L, tA)); q.processAllAvailable()   // near-dup of doc 0
-      val kept = spark.read.parquet(outDir)
-        .select($"doc_id").as[Long].collect().toSeq.sorted
-      assert(kept === Seq(0L, 1L, 2L))
     } finally q.stop()
   }
 
@@ -91,7 +70,7 @@ class StreamSimhashSpec extends SparkSpec {
     //   - every stream survivor must be dup-free per the batch query.
     val dir = "/root/testdata/sf0.001"
     val base = Files.createTempDirectory("graft-ssim-inc").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
+    val indexDir = s"$base/index"
 
     val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
     val n = docs.count()
@@ -103,11 +82,11 @@ class StreamSimhashSpec extends SparkSpec {
 
     val fresh = docs.filter($"doc_id" >= cut).as[(Long, String)].collect()
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamSimhash.run(in.toDF().toDF("doc_id", "text"), indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("doc_id", "text"), base)
     try {
       in.addData(fresh.toIndexedSeq)
       q.processAllAvailable()
-      val survivors = spark.read.parquet(outDir)
+      val survivors = StreamSimhash.survivors(spark, base)
         .select($"doc_id").as[Long].collect().toSet
       val inc = operators.Dedup.qDedupIncremental.run(spark, dir)
         .select($"doc_id", $"dup_of").as[(Long, Option[Long])].collect()
@@ -130,10 +109,8 @@ class StreamSimhashSpec extends SparkSpec {
     // index, not a reset one. The fixture is chain-free, so the final
     // survivor set equals the single-pass batch screen on the full input.
     val base = Files.createTempDirectory("graft-ssim-restart").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, String)](spark)
-    def start() =
-      StreamSimhash.run(in.toDF().toDF("doc_id", "text"), indexDir, outDir, ckpt)
+    def start() = startScreen(in.toDF().toDF("doc_id", "text"), base)
 
     val q1 = start()
     try { in.addData((0L, tA), (1L, tB)); q1.processAllAvailable() }
@@ -144,69 +121,62 @@ class StreamSimhashSpec extends SparkSpec {
     try { q2.processAllAvailable() } finally q2.stop()
 
     // doc 2 suppressed by doc 0's RESTORED index entry; 0/1 emitted once
-    val kept = spark.read.parquet(outDir)
+    val kept = StreamSimhash.survivors(spark, base)
       .select($"doc_id").as[Long].collect().toSeq.sorted
     assert(kept === Seq(0L, 1L, 3L))
-    val idx = spark.read.parquet(indexDir)
+    val idx = StreamSimhash.Index.read(spark, base)
       .as[(Long, Long)].collect().toMap
     assert(idx.keySet === Set(0L, 1L, 3L))
   }
 
   test("crash-window replay re-emits survivors, never self-suppresses") {
     // the documented crash window: survivors + signatures written, but the
-    // checkpoint commit lost — on recovery the batch re-runs through
-    // foreachBatch against an index that ALREADY holds its own rows.
-    // Simulated by re-delivering the committed batch through a fresh
-    // checkpoint (the metadata log refuses hand-deleted commit files as
-    // concurrent use, so the replay is driven at the delivery layer — the
-    // foreachBatch body cannot tell the difference). The contract: the
-    // replayed docs RE-EMIT (at-least-once; self-matches excluded by
-    // doc_id — index-first ordering would swallow them silently), and the
-    // replay-duplicated index rows neither suppress novel documents nor
-    // weaken suppression of true near-dups
-    val base = Files.createTempDirectory("graft-ssim-crash").toString
-    val (indexDir, outDir) = (s"$base/index", s"$base/out")
-    val in = MemoryStream[(Long, String)](spark)
-    def start(ckpt: String) =
-      StreamSimhash.run(in.toDF().toDF("doc_id", "text"), indexDir, outDir,
-        s"$base/$ckpt")
+    // checkpoint commit lost — on recovery the batch re-runs against an
+    // index that ALREADY holds its own delta. Driven at the processBatch
+    // layer: the same batch id twice. The contract: the probe leaves out
+    // the batch's own delta, so the replay recomputes the same survivors
+    // and its fixed-path writes replace the first attempt's — the plain,
+    // undeduplicated reads equal a fault-free run (exactly-once), and true
+    // near-dups are still suppressed afterwards
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def drive(logDir: String, replay: Boolean): Unit = {
+      StreamSimhash.processBatch(docs((0L, tA), (1L, tB)), 0L, logDir)
+      if (replay)
+        StreamSimhash.processBatch(docs((0L, tA), (1L, tB)), 0L, logDir)
+      StreamSimhash.processBatch(docs((5L, tC)), 1L, logDir) // novel doc
+      StreamSimhash.processBatch(docs((6L, tA)), 2L, logDir) // true near-dup
+    }
+    val replayed = Files.createTempDirectory("graft-ssim-crash").toString
+    val clean = Files.createTempDirectory("graft-ssim-clean").toString
+    drive(replayed, replay = true)
+    drive(clean, replay = false)
 
-    val q1 = start("ckpt1")
-    try { in.addData((0L, tA), (1L, tB)); q1.processAllAvailable() }
-    finally q1.stop()
-
-    // recovery replay: a fresh checkpoint makes the memory source replay
-    // from offset 0, re-running the already-committed delivery
-    val q2 = start("ckpt2")
-    try {
-      q2.processAllAvailable()
-      in.addData((5L, tC))       // novel doc after the replay
-      q2.processAllAvailable()
-      in.addData((6L, tA))       // true near-dup of the twice-indexed doc
-      q2.processAllAvailable()
-    } finally q2.stop()
-
-    val emitted = spark.read.parquet(outDir)
+    def survivors(d: String) = StreamSimhash.survivors(spark, d)
       .select($"doc_id").as[Long].collect().toSeq.sorted
-    // at-least-once: 0 and 1 appear TWICE (replayed), never zero times;
-    // the novel doc survives; the near-dup (6) is still suppressed
-    assert(emitted === Seq(0L, 0L, 1L, 1L, 5L))
+    def index(d: String) = StreamSimhash.Index.read(spark, d)
+      .as[(Long, Long)].collect().toSeq.sorted
+    // exactly-once: 0 and 1 appear ONCE, never zero times; the novel doc
+    // survives; the near-dup (6) is still suppressed
+    assert(survivors(replayed) === Seq(0L, 1L, 5L))
+    assert(survivors(replayed) === survivors(clean))
+    assert(index(replayed).map(_._1) === Seq(0L, 1L, 5L))
+    assert(index(replayed) === index(clean))
   }
 
   test("a pre-existing batch-built index suppresses stream documents (shared layout)") {
     val base = Files.createTempDirectory("graft-ssim-seed").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
+    val indexDir = s"$base/index"
     // seed the index exactly like the batch pipeline would persist it
     Seq((100L, tA)).toDF("old_id", "text")
       .select($"old_id", call_function("simhash32", $"text").as("old_sig"))
       .write.parquet(indexDir)
 
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamSimhash.run(in.toDF().toDF("doc_id", "text"), indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("doc_id", "text"), base)
     try {
       in.addData((0L, tA), (1L, tB))   // 0 collides with the seeded corpus
       q.processAllAvailable()
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamSimhash.survivors(spark, base)
         .select($"doc_id").as[Long].collect().toSeq.sorted
       assert(kept === Seq(1L))
     } finally q.stop()

@@ -4,6 +4,7 @@ import graft.streaming.StreamWinnow
 import graft.operators.Dedup
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 import java.nio.file.Files
 
 /** Streaming winnowing-overlap screen end-to-end: passage-level suppression
@@ -22,6 +23,10 @@ class StreamWinnowSpec extends SparkSpec {
   private val tC = "unrelated sentence about brown foxes jumping over lazy dogs today"
   private val tD = "spark executors shuffle partitioned data across the cluster network fabric"
 
+  private def startScreen(stream: org.apache.spark.sql.DataFrame,
+      logDir: String) =
+    StreamWinnow.run(stream, logDir, Trigger.ProcessingTime(0L))
+
   private def fps(text: String): Set[String] =
     Seq(text).toDF("text")
       .select(call_function("winnow_hashes", $"text",
@@ -39,9 +44,8 @@ class StreamWinnowSpec extends SparkSpec {
 
   test("multi-batch replay: passage re-wraps suppressed within and across batches") {
     val base = Files.createTempDirectory("graft-swin").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamWinnow.run(in.toDF().toDF("doc_id", "text"), indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("doc_id", "text"), base)
     try {
       // batch 1: doc 10 re-wraps doc 0's passage -> intra-batch keep-lowest
       in.addData((0L, tA), (10L, tB), (1L, tC))
@@ -50,11 +54,11 @@ class StreamWinnowSpec extends SparkSpec {
       in.addData((2L, tB), (3L, tD))
       q.processAllAvailable()
 
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamWinnow.survivors(spark, base)
         .select($"doc_id").as[Long].collect().toSeq.sorted
       assert(kept === Seq(0L, 1L, 3L))
       // the index holds exactly the survivors' fingerprint postings
-      val idx = spark.read.parquet(indexDir)
+      val idx = StreamWinnow.Index.read(spark, base)
         .as[(String, Long)].collect()
       assert(idx.map(_._2).toSet === Set(0L, 1L, 3L))
       assert(idx.filter(_._2 == 0L).map(_._1).toSet === fps(tA))
@@ -63,7 +67,7 @@ class StreamWinnowSpec extends SparkSpec {
 
   test("a batch-built fingerprint index suppresses stream documents (shared layout)") {
     val base = Files.createTempDirectory("graft-swin-seed").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
+    val indexDir = s"$base/index"
     // seed exactly like a batch job would: explode winnow_hashes postings
     Seq((100L, tA)).toDF("old_id", "text")
       .select(explode(call_function("winnow_hashes", $"text",
@@ -71,11 +75,11 @@ class StreamWinnowSpec extends SparkSpec {
       .write.parquet(indexDir)
 
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamWinnow.run(in.toDF().toDF("doc_id", "text"), indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("doc_id", "text"), base)
     try {
       in.addData((0L, tB), (1L, tD))  // 0 re-wraps the seeded passage
       q.processAllAvailable()
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamWinnow.survivors(spark, base)
         .select($"doc_id").as[Long].collect().toSeq.sorted
       assert(kept === Seq(1L))
     } finally q.stop()
@@ -87,10 +91,8 @@ class StreamWinnowSpec extends SparkSpec {
     // (offsets committed), and the restarted screen must suppress a
     // passage re-wrap from the PERSISTED posting index, not a reset one
     val base = Files.createTempDirectory("graft-swin-restart").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
     val in = MemoryStream[(Long, String)](spark)
-    def start() = StreamWinnow.run(in.toDF().toDF("doc_id", "text"),
-      indexDir, outDir, ckpt)
+    def start() = startScreen(in.toDF().toDF("doc_id", "text"), base)
 
     val q1 = start()
     try { in.addData((0L, tA), (1L, tC)); q1.processAllAvailable() }
@@ -100,41 +102,41 @@ class StreamWinnowSpec extends SparkSpec {
     val q2 = start()
     try { q2.processAllAvailable() } finally q2.stop()
 
-    val kept = spark.read.parquet(outDir)
+    val kept = StreamWinnow.survivors(spark, base)
       .select($"doc_id").as[Long].collect().toSeq.sorted
     assert(kept === Seq(0L, 1L, 3L))
-    assert(spark.read.parquet(indexDir)
+    assert(StreamWinnow.Index.read(spark, base)
       .select($"old_id").as[Long].collect().toSet === Set(0L, 1L, 3L))
   }
 
   test("crash-window replay re-emits survivors, never self-suppresses") {
-    // lost-commit recovery: a fresh checkpoint replays the memory source
-    // from offset 0 against an index already holding the batch's own
-    // postings — the replayed docs must RE-EMIT (self-pairs excluded by
-    // doc_id), the duplicated postings must not suppress novel docs (the
-    // countDistinct discipline), and a true re-wrap must still suppress
-    val base = Files.createTempDirectory("graft-swin-crash").toString
-    val (indexDir, outDir) = (s"$base/index", s"$base/out")
-    val in = MemoryStream[(Long, String)](spark)
-    def start(ckpt: String) = StreamWinnow.run(
-      in.toDF().toDF("doc_id", "text"), indexDir, outDir, s"$base/$ckpt")
+    // lost-commit recovery, driven at the processBatch layer: the committed
+    // batch re-runs under its own id against an index already holding its
+    // postings. The probe leaves that delta out, so the replay recomputes
+    // the same survivors and replaces its own files — the plain reads
+    // equal a fault-free run (exactly-once: no duplicated postings), and a
+    // true re-wrap must still suppress
+    def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
+    def drive(logDir: String, replay: Boolean): Unit = {
+      StreamWinnow.processBatch(docs((0L, tA), (1L, tC)), 0L, logDir)
+      if (replay)
+        StreamWinnow.processBatch(docs((0L, tA), (1L, tC)), 0L, logDir)
+      StreamWinnow.processBatch(docs((5L, tD)), 1L, logDir) // novel doc
+      StreamWinnow.processBatch(docs((6L, tB)), 2L, logDir) // re-wrap
+    }
+    val replayed = Files.createTempDirectory("graft-swin-crash").toString
+    val clean = Files.createTempDirectory("graft-swin-clean").toString
+    drive(replayed, replay = true)
+    drive(clean, replay = false)
 
-    val q1 = start("ckpt1")
-    try { in.addData((0L, tA), (1L, tC)); q1.processAllAvailable() }
-    finally q1.stop()
-
-    val q2 = start("ckpt2")
-    try {
-      q2.processAllAvailable()     // replay of the committed delivery
-      in.addData((5L, tD))         // novel doc after the replay
-      q2.processAllAvailable()
-      in.addData((6L, tB))         // re-wrap of the twice-indexed passage
-      q2.processAllAvailable()
-    } finally q2.stop()
-
-    val emitted = spark.read.parquet(outDir)
+    def survivors(d: String) = StreamWinnow.survivors(spark, d)
       .select($"doc_id").as[Long].collect().toSeq.sorted
-    assert(emitted === Seq(0L, 0L, 1L, 1L, 5L))
+    def index(d: String) = StreamWinnow.Index.read(spark, d)
+      .as[(String, Long)].collect().toSeq.sorted
+    assert(survivors(replayed) === Seq(0L, 1L, 5L))
+    assert(survivors(replayed) === survivors(clean))
+    assert(index(replayed).map(_._2).toSet === Set(0L, 1L, 5L))
+    assert(index(replayed) === index(clean))
   }
 
   test("whole-document SimHash misses the re-wrap this screen catches") {
@@ -147,23 +149,22 @@ class StreamWinnowSpec extends SparkSpec {
   }
 
   test("replay-duplicated index postings do not inflate shared counts (countDistinct)") {
-    // simulate a crash-replay that appended the same (fp, old_id) posting
-    // twice: a new doc sharing exactly ONE distinct fingerprint with the
-    // old doc must SURVIVE (1 < MinShared=2) — a raw row count would see
+    // a batch-built index seeded under <logDir>/index holding the same
+    // (fp, old_id) posting twice: a new doc sharing exactly ONE distinct
+    // fingerprint with the old doc must SURVIVE (1 < MinShared=2) — a raw row count would see
     // 2 and falsely suppress it
     val base = Files.createTempDirectory("graft-swin-replay").toString
-    val (indexDir, outDir, ckpt) = (s"$base/index", s"$base/out", s"$base/ckpt")
+    val indexDir = s"$base/index"
     val oneFp = fps(tC).head
     Seq((oneFp, 99L), (oneFp, 99L)).toDF("fp", "old_id")
       .write.parquet(indexDir)
 
     val in = MemoryStream[(Long, String)](spark)
-    val q = StreamWinnow.run(in.toDF().toDF("doc_id", "text"),
-      indexDir, outDir, ckpt)
+    val q = startScreen(in.toDF().toDF("doc_id", "text"), base)
     try {
       in.addData((1L, tC))
       q.processAllAvailable()
-      val kept = spark.read.parquet(outDir)
+      val kept = StreamWinnow.survivors(spark, base)
         .select($"doc_id").as[Long].collect().toSeq
       assert(kept === Seq(1L),
         "a single distinct shared fingerprint (replay-doubled) must not suppress")
